@@ -404,8 +404,8 @@ def main() -> None:
         # local[32] with cached hot tables (GC churn dominates and
         # destabilizes timings). Bench-scoped, not a library default.
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        # The bench caches its hot tables repartitioned to full parallelism
-        # (cache_tables below), so the per-operator partition-count probe in
+        # The bench caches its hot tables repartitioned by cache_tables' size
+        # rule (below), so the per-operator partition-count probe in
         # ensure_parallelism is pure overhead here — skip it, as its
         # docstring prescribes for well-partitioned deployments. The tiny
         # uncached embeddings table then runs its Arrow matmuls in one

@@ -177,8 +177,10 @@ def brute_force_topk(
                 }
             )
 
-    c = ensure_parallelism(corpus).select(
-        F.col(corpus_id).alias("neighbor_id"), F.col(corpus_vec).alias("cv")
+    c = (
+        ensure_parallelism(corpus)
+        .filter(F.col(corpus_id).isNotNull())
+        .select(F.col(corpus_id).alias("neighbor_id"), F.col(corpus_vec).alias("cv"))
     )
     scored = (
         c.mapInPandas(_fold, schema="qpos int, neighbor_id long, sim double")

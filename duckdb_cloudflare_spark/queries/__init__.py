@@ -20,11 +20,16 @@ order-insensitively with columns sorted by name, so:
 
 from __future__ import annotations
 
+import math
 import os
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
+
+from duckdb_cloudflare_spark.util.caching import release_all_slots
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -59,6 +64,31 @@ def register(name: str, oracle: str | None = None, description: str = ""):
 _TABLE_CACHE: dict[str, DataFrame] = {}
 
 
+# Source parquet bytes per cached partition: ~1.4 MB for JVM consumers (sf0.1
+# lineitem's 10.8 MB on 8), ~75 KB for per-row Python/codec consumers.
+CACHE_BYTES_PER_PART = 1_400_000
+PY_OP_BYTES_PER_PART = 75_000
+
+
+def _src_bytes(path: str) -> int:
+    """Data bytes of a file or of a parquet directory tree, skipping
+    ``.``/``_`` entries; 0 on any OSError (remote or missing path)."""
+    try:
+        if not os.path.isdir(path):
+            return os.path.getsize(path)
+        total = 0
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+            total += sum(
+                os.path.getsize(os.path.join(root, f))
+                for f in files
+                if not f.startswith((".", "_"))
+            )
+        return total
+    except OSError:
+        return 0
+
+
 def cache_tables(
     spark: SparkSession,
     sf_dir: str,
@@ -69,131 +99,100 @@ def cache_tables(
     parallelism: int | None = None,
     python_op_tables: tuple[str, ...] = ("documents",),
 ) -> None:
-    """Cache ``tables`` in memory, repartitioned per a split policy. A
-    single-file/single-row-group parquet table scans as ONE task no matter
-    the conf — the repartition paid once here buys downstream map stages
-    their parallelism. At real scale the data arrives in many files and the
-    repartition is a no-op cost relative to the scan; callers control the
-    partition count either way.
+    """Cache ``tables`` in memory, each repartitioned to a count sized from
+    its data. A single-file parquet table scans as one task whatever the
+    conf; the repartition paid once here gives downstream map stages their
+    parallelism.
 
-    Partitioning policy (when ``parallelism`` is None): tables consumed by
-    Arrow/pandas-UDF operators (``python_op_tables``) get full
-    ``defaultParallelism`` — their per-row Python work dwarfs task overhead,
-    so fan-out wins. Scalar relational tables get a SIZE-DERIVED count
-    (r15, guide §2: scale-adaptive partitioning instead of a constant
-    tuned for one scale): one cached partition per ~1.4 MB of source
-    parquet — the r3-measured sf0.1 sweet spot (lineitem 10.8 MB / 8
-    partitions), floored at the old ``min(8, cores)`` so sf0.1 behavior
-    is bit-for-bit unchanged, capped at ``cores``. At the 10× sf1 lane
-    the old constant left 6M-row scans on 8 of 32 cores (q01 measured
-    1.76 s; DuckDB 0.15); deriving from input size restores scan
-    parallelism exactly when the data grows, at any core count the
-    driver benches. An explicit ``parallelism`` overrides everything.
+    One rule sizes every table: ``n = clamp(ceil(source_bytes / rate), 1,
+    cores)``, with ``rate`` = ``PY_OP_BYTES_PER_PART`` for
+    ``python_op_tables`` (per-row Python consumers fan out sooner) and
+    ``CACHE_BYTES_PER_PART`` otherwise. An explicit ``parallelism``
+    overrides the rule.
+
+    Each table is loaded, repartitioned, cached and counted as its own
+    Spark job, all tables at once from a thread pool that carries the
+    caller's job group and local properties. The cache is updated only
+    after every job has succeeded; otherwise the first failure is raised
+    and nothing stays cached.
 
     ``embeddings`` is deliberately NOT in the default set: its array<float>
     column deserializes through the generic (non-codegen) path out of the
     columnar cache, which measured SLOWER than re-reading parquet — nested
-    types don't benefit from InMemoryRelation.
-
-    r16 (VERDICT r15 item 4): ``python_op_tables`` are size-derived too,
-    at a ~19× finer rate (one partition per ~75 KB of source parquet vs
-    ~1.4 MB) because their consumers do per-row Python/codec work —
-    but a flat ``defaultParallelism`` was the constant-vs-size mistake
-    in the opposite direction: 32 Arrow-fed Python workers on ~0.6 MB
-    of sf0.1 documents is pure task/feed overhead (the multimodal ops
-    measured 2–3× FASTER on 8 cores than 32 — PERF_r15 scaling
-    0.29–0.46). At the rate shipped, sf0.1 documents lands on the
-    min(8, cores) floor and the 10× lane keeps full fan-out
-    (``spark.duckdb_cloudflare.pythonOpBytesPerPartition`` overrides)."""
-    import math
-
+    types don't benefit from InMemoryRelation."""
     cores = spark.sparkContext.defaultParallelism
+    root = sf_dir.rstrip("/")
+    todo = [t for t in dict.fromkeys(tables) if _cached(spark, sf_dir, t) is None]
+    if not todo:
+        return
+    if "events" in todo:
+        _pin_events_confs(spark)
 
-    def _conf_rate(key: str, default: int) -> int:
-        # guard <= 0 (ADVICE r15): a user-set '0' must not turn the
-        # ceil() below into a ZeroDivisionError — fall back loudly
-        v = int(spark.conf.get(key, str(default)))
-        if v <= 0:
-            import warnings
+    def _cache_one(t: str) -> DataFrame:
+        path = f"{root}/{t}.parquet"
+        rate = PY_OP_BYTES_PER_PART if t in python_op_tables else CACHE_BYTES_PER_PART
+        n = parallelism or min(cores, max(1, math.ceil(_src_bytes(path) / rate)))
+        df = _scan(spark, sf_dir, t)
+        if df.rdd.getNumPartitions() != n:
+            df = df.repartition(n)
+        df = df.cache()
+        df.count()  # materialize now, outside any query timing
+        return df
 
-            warnings.warn(
-                f"cache_tables: {key}={v} invalid, using default {default}"
-            )
-            return default
-        return v
-
-    def _src_bytes(path: str) -> int:
-        # directory-style parquet output: getsize() of the dirent is
-        # ~4 KB, not the data size — sum the files (ADVICE r15); any
-        # OSError (remote path, missing file) falls back to 0, which
-        # lands the table on the min(8, cores) floor
-        try:
-            if os.path.isdir(path):
-                return sum(
-                    os.path.getsize(os.path.join(path, f))
-                    for f in os.listdir(path)
-                    if not f.startswith((".", "_"))
-                )
-            return os.path.getsize(path)
-        except OSError:
-            return 0
-
-    bytes_per_part = _conf_rate(
-        "spark.duckdb_cloudflare.cacheBytesPerPartition", 1_400_000
-    )
-    py_bytes_per_part = _conf_rate(
-        "spark.duckdb_cloudflare.pythonOpBytesPerPartition", 75_000
-    )
-    for t in tables:
-        if parallelism:
-            n = parallelism
-        else:
-            sz = _src_bytes(f"{sf_dir.rstrip('/')}/{t}.parquet")
-            rate = py_bytes_per_part if t in python_op_tables else bytes_per_part
-            n = max(
-                min(8, cores),
-                min(cores, math.ceil(sz / rate)),
-            )
-        key = f"{sf_dir.rstrip('/')}/{t}"
-        cached = _TABLE_CACHE.get(key)
-        if cached is None or cached.sparkSession is not spark:
-            df = load(spark, sf_dir, t)
-            if df.rdd.getNumPartitions() != n:
-                df = df.repartition(n)
-            df = df.cache()
-            df.count()  # materialize now, outside any query timing
-            _TABLE_CACHE[key] = df
+    # PYSPARK_PIN_THREAD=false: no thread-local properties, session returned
+    wrap = inheritable_thread_target(spark)
+    target = wrap(_cache_one) if callable(wrap) else _cache_one
+    with ThreadPoolExecutor(len(todo)) as pool:
+        futures = [pool.submit(target, t) for t in todo]
+    done = [f.result() for f in futures if f.exception() is None]
+    if len(done) < len(todo):
+        for df in done:
+            df.unpersist()
+        raise next(f.exception() for f in futures if f.exception() is not None)
+    _TABLE_CACHE.update({f"{root}/{t}": df for t, df in zip(todo, done)})
 
 
 def uncache_tables() -> None:
+    """Release every cached base table and every ``util.caching`` slot."""
     for df in _TABLE_CACHE.values():
         try:
             df.unpersist()
         except Exception:
             pass
     _TABLE_CACHE.clear()
+    release_all_slots()
+
+
+def _pin_events_confs(spark: SparkSession) -> None:
+    """Runtime confs ``_scan`` needs for events: nanosAsLong reads a
+    TIMESTAMP(NANOS) ts as long, and a UTC session zone makes the
+    NTZ→TimestampType cast keep the stored wall clock under a caller's
+    session on another zone (shifted instants and DST gaps would break
+    parity with DuckDB's naive TIMESTAMP and batch/streaming equivalence)."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def _cached(spark: SparkSession, sf_dir: str, table: str) -> DataFrame | None:
+    df = _TABLE_CACHE.get(f"{sf_dir.rstrip('/')}/{table}")
+    return df if df is not None and df.sparkSession is spark else None
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    cached = _TABLE_CACHE.get(f"{sf_dir.rstrip('/')}/{table}")
-    if cached is not None and cached.sparkSession is spark:
+    cached = _cached(spark, sf_dir, table)
+    if cached is not None:
         return cached
-    # The events table's ts column has varied across testdata generations:
-    # TIMESTAMP(NANOS) (readable only as long with the legacy conf) or
-    # timestamp[us] with isAdjustedToUTC=false (read as TIMESTAMP_NTZ).
-    # Normalize both to session-TZ TimestampType (session TZ is pinned UTC,
-    # so NTZ→TZ keeps the same wall-clock instant — parity with DuckDB's
-    # naive TIMESTAMP) so every downstream query sees one type.
     if table == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # The NTZ→TimestampType cast below interprets the naive wall clock in
-        # the SESSION time zone at execution time: under a caller-provided
-        # session on a non-UTC zone the instants would shift (and DST gaps
-        # corrupt interval arithmetic), breaking oracle parity with DuckDB's
-        # naive TIMESTAMP and batch/streaming equivalence. Pin UTC (runtime
-        # conf, same precedent as the nanosAsLong pin above) so the rendered
-        # wall clock is the stored wall clock everywhere.
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        _pin_events_confs(spark)
+    return _scan(spark, sf_dir, table)
+
+
+def _scan(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    # The events table's ts column has varied across testdata generations:
+    # TIMESTAMP(NANOS) (read as long under nanosAsLong) or timestamp[us]
+    # with isAdjustedToUTC=false (read as TIMESTAMP_NTZ). Both become
+    # TimestampType in the pinned UTC session zone, so every downstream
+    # query sees one type with the stored wall clock.
     df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
     from pyspark.sql import functions as F

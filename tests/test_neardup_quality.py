@@ -216,6 +216,18 @@ def test_brute_force_dim_mismatch_raises(spark):
         S.brute_force_topk(q, corpus, k=1).collect()
 
 
+def test_brute_force_null_corpus_id_never_ranked(spark):
+    # A corpus row with a NULL id must not surface as a neighbor (it used
+    # to come back as id -2**63 at nn_rank 1, being the query's exact copy).
+    q = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<double>")
+    corpus = spark.createDataFrame(
+        [(None, [1.0, 0.0]), (10, [0.9, 0.1]), (11, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    got = [(r["neighbor_id"], r["nn_rank"]) for r in S.brute_force_topk(q, corpus, k=2).collect()]
+    assert sorted(got, key=lambda t: t[1]) == [(10, 1), (11, 2)]
+
+
 def test_duplicated_ngram_fraction_planted(spark):
     rows = [
         (1, "alpha beta gamma delta epsilon zeta eta theta"),   # copy of 2
