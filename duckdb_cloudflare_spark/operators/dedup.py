@@ -12,7 +12,7 @@ Scale design (the part that matters at 100 TB):
   candidates.
 - Hashing is hybrid: base token/shingle hashing is JVM-side xxhash64/md5
   (codegen), while the per-permutation signature math runs in Arrow-batched
-  pandas UDFs as numpy matrix ops — Spark's higher-order array functions are
+  Arrow UDFs as numpy matrix ops — Spark's higher-order array functions are
   interpreted, so "stay JVM-side" is NOT the fast path for O(perms × tokens)
   arithmetic; vectorized-batch Python beats it ~4× while shipping only
   int64 arrays across the Arrow boundary.
@@ -21,11 +21,12 @@ Scale design (the part that matters at 100 TB):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.types import ArrayType, DoubleType, LongType
 from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
@@ -34,6 +35,7 @@ from duckdb_cloudflare_spark.operators.text_analysis import (
     normalize_text,
     tokens,
 )
+from duckdb_cloudflare_spark.util import vectors
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -132,32 +134,18 @@ def _segment_chunks(lens: np.ndarray):
         i = j
 
 
-def _flatten_i64(values: list) -> tuple[np.ndarray, np.ndarray]:
-    """(lens, flat-as-uint64) for a list of int64 sequences (None → 0)."""
-    lens = np.fromiter(
-        (0 if v is None else len(v) for v in values), dtype=np.int64, count=len(values)
-    )
-    nonempty = [np.asarray(v, dtype=np.int64) for v in values if v is not None and len(v)]
-    flat = (
-        np.concatenate(nonempty).view(np.uint64)
-        if nonempty
-        else np.empty(0, dtype=np.uint64)
-    )
-    return lens, flat
-
-
-def _minhash_rows(values: list, a: np.ndarray, b: np.ndarray) -> list:
+def _minhash_rows(hashes: pa.Array, a: np.ndarray, b: np.ndarray) -> pa.Array:
     """Vectorized minhash: for each row (an int64 hash array), the per-
-    permutation min of (a*h + b) mod 2^64. Empty/None rows → None."""
-    lens, flat = _flatten_i64(values)
-    out: list = [None] * len(values)
+    permutation min of (a*h + b) mod 2^64. Empty/NULL rows → NULL."""
+    lens, flat = vectors.ragged(hashes)
+    flat = flat.view(np.uint64)
+    out = np.zeros((len(lens), len(a)), dtype=np.int64)
     for rows, s, e, local_starts in _segment_chunks(lens):
         seg = flat[s:e]
         m = a[:, None] * seg[None, :] + b[:, None]  # uint64 wraparound by design
-        mins = np.minimum.reduceat(m, local_starts, axis=1).view(np.int64)
-        for t, ridx in enumerate(rows):
-            out[ridx] = mins[:, t]
-    return out
+        out[rows] = np.minimum.reduceat(m, local_starts, axis=1).view(np.int64).T
+    rows = np.nonzero(lens)[0]
+    return vectors.lists(out[rows], rows, len(lens))
 
 
 _SIG_UDF_CACHE: dict = {}
@@ -165,13 +153,11 @@ _SIG_UDF_CACHE: dict = {}
 
 def _minhash_sig_udf(num_perm: int):
     if num_perm not in _SIG_UDF_CACHE:
-        from pyspark.sql.functions import pandas_udf
-
         a, b = _perm_params(num_perm)
 
-        @pandas_udf(ArrayType(LongType()))
-        def sig(bh: pd.Series) -> pd.Series:
-            return pd.Series(_minhash_rows(bh.tolist(), a, b), dtype=object)
+        @arrow_udf(ArrayType(LongType()))
+        def sig(bh: pa.Array) -> pa.Array:
+            return _minhash_rows(bh, a, b)
 
         _SIG_UDF_CACHE[num_perm] = sig
     return _SIG_UDF_CACHE[num_perm]
@@ -179,7 +165,7 @@ def _minhash_sig_udf(num_perm: int):
 
 def minhash_signature(shingle_col: Column, num_perm: int = 64) -> Column:
     """MinHash signature: one JVM pass hashes every shingle to int64
-    (xxhash64), then an Arrow-batched pandas UDF applies all ``num_perm``
+    (xxhash64), then an Arrow-batched UDF applies all ``num_perm``
     multiply-add permutations as a single numpy matrix op with
     ``minimum.reduceat`` per row. Empty shingle set → null (never matches).
 
@@ -606,29 +592,29 @@ def dedup_keep_best(
 # ---------------------------------------------------------------------------
 
 
-def _simhash_rows(values: list, bits: int) -> np.ndarray:
+def _simhash_rows(hashes: pa.Array, bits: int) -> pa.Array:
     """Vectorized simhash votes: unpack each token hash into ±1 bit votes,
     sum per row (add.reduceat), pack sign bits. Empty rows → 0."""
-    lens, flat = _flatten_i64(values)
+    lens, flat = vectors.ragged(hashes)
+    flat = flat.view(np.uint64)
     shifts = np.arange(bits, dtype=np.uint64)
-    out = np.zeros(len(values), dtype=np.int64)
+    out = np.zeros(len(lens), dtype=np.int64)
     for rows, s, e, local_starts in _segment_chunks(lens):
         seg = flat[s:e]
         votes_pm = ((seg[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.int32) * 2 - 1
         sums = np.add.reduceat(votes_pm, local_starts, axis=0)  # (rows, bits)
         packed = ((sums > 0).astype(np.uint64) << shifts[None, :]).sum(axis=1).astype(np.int64)
         out[rows] = packed
-    return out
+    return pa.array(out)
 
 
 def _simhash_udf(bits: int):
     key = ("simhash", bits)
     if key not in _SIG_UDF_CACHE:
-        from pyspark.sql.functions import pandas_udf
 
-        @pandas_udf(LongType())
-        def sh(hashes: pd.Series) -> pd.Series:
-            return pd.Series(_simhash_rows(hashes.tolist(), bits))
+        @arrow_udf(LongType())
+        def sh(hashes: pa.Array) -> pa.Array:
+            return _simhash_rows(hashes, bits)
 
         _SIG_UDF_CACHE[key] = sh
     return _SIG_UDF_CACHE[key]
@@ -636,7 +622,7 @@ def _simhash_udf(bits: int):
 
 def simhash(text: Column, bits: int = 32) -> Column:
     """SimHash over whitespace tokens: per-token xxhash64 (one JVM pass),
-    then an Arrow-batched pandas UDF does the bitwise ±1 vote and sign-bit
+    then an Arrow-batched UDF does the bitwise ±1 vote and sign-bit
     packing as numpy matrix ops. 32 bits keeps Hamming grouping effective;
     the pure-expression formulation (``bits`` interpreted aggregate passes
     over the hash array) measured ~4× slower — higher-order functions do
@@ -753,42 +739,38 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _cosine_rows(a_vals: list, b_vals: list) -> np.ndarray:
-    """Vectorized pairwise cosine over two lists of equal-dim vectors.
-    Zero-norm or missing vectors → 0.0 (matches the expression semantics)."""
-    n = len(a_vals)
-    out = np.zeros(n, dtype=np.float64)
-    ok = [
-        i
-        for i in range(n)
-        if a_vals[i] is not None and b_vals[i] is not None and len(a_vals[i]) == len(b_vals[i]) and len(a_vals[i]) > 0
-    ]
-    if not ok:
-        return out
-    # float64 accumulation, elements cast from float32 first — same contract
-    # as the DuckDB oracle (sum-order differences are below the 1e-6 rounding
-    # applied by every caller).
-    A = np.vstack([np.asarray(a_vals[i], dtype=np.float64) for i in ok])
-    B = np.vstack([np.asarray(b_vals[i], dtype=np.float64) for i in ok])
-    dot = np.einsum("ij,ij->i", A, B)
-    na = np.sqrt(np.einsum("ij,ij->i", A, A))
-    nb = np.sqrt(np.einsum("ij,ij->i", B, B))
-    denom = na * nb
-    np.divide(dot, denom, out=dot, where=denom > 0)
-    dot[denom <= 0] = 0.0
-    out[ok] = dot
-    return out
+def _cosine_rows(a: pa.Array, b: pa.Array) -> pa.Array:
+    """Vectorized pairwise cosine over two list columns. NULL, empty,
+    unequal-length or zero-norm pairs → 0.0 (matches the expression
+    semantics); a NULL element yields NULL."""
+    out = np.zeros(len(a), dtype=np.float64)
+    la, lb = vectors.lengths(a), vectors.lengths(b)
+    # one matrix per distinct length (a batch of one embedding column has one)
+    for d in np.unique(la[(la == lb) & (la > 0)]):
+        A, ra, _ = vectors.fixed(a, d)
+        B, rb, _ = vectors.fixed(b, d)
+        ok = np.intersect1d(ra, rb)
+        A, B = A[np.isin(ra, ok)], B[np.isin(rb, ok)]
+        # float64 accumulation, elements cast from float32 first — same
+        # contract as the DuckDB oracle (sum-order differences are below
+        # the 1e-6 rounding applied by every caller).
+        dot = np.einsum("ij,ij->i", A, B)
+        na = np.sqrt(np.einsum("ij,ij->i", A, A))
+        nb = np.sqrt(np.einsum("ij,ij->i", B, B))
+        denom = na * nb
+        np.divide(dot, denom, out=dot, where=denom > 0)
+        dot[denom <= 0] = 0.0
+        out[ok] = dot
+    return pa.array(out, mask=np.isnan(out))
 
 
 def _cosine_udf():
     key = "cosine"
     if key not in _SIG_UDF_CACHE:
-        from pyspark.sql.functions import pandas_udf
-        from pyspark.sql.types import DoubleType
 
-        @pandas_udf(DoubleType())
-        def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-            return pd.Series(_cosine_rows(a.tolist(), b.tolist()))
+        @arrow_udf(DoubleType())
+        def cos(a: pa.Array, b: pa.Array) -> pa.Array:
+            return _cosine_rows(a, b)
 
         _SIG_UDF_CACHE[key] = cos
     return _SIG_UDF_CACHE[key]
@@ -796,7 +778,7 @@ def _cosine_udf():
 
 def cosine_similarity(a: Column, b: Column) -> Column:
     """Cosine similarity of two array<float/double> columns, computed as a
-    batched numpy matrix op behind an Arrow pandas UDF. The expression-tree
+    batched numpy matrix op behind an Arrow UDF. The expression-tree
     formulation (zip_with + three aggregate passes) is interpreted and was
     the hot path of every ANN operator; einsum over the Arrow batch is ~5×
     faster at 128-dim. Elements are widened to float64 before multiplying
@@ -844,30 +826,24 @@ def embedding_neardup_pairs(
     )
 
 
-def _sketch_rows(values: list, planes_t: np.ndarray) -> np.ndarray:
-    """Sign-bit sketches: (n, d) @ (d, P) → packed int64. None → 0."""
-    n = len(values)
-    out = np.zeros(n, dtype=np.int64)
-    ok = [i for i in range(n) if values[i] is not None and len(values[i]) == planes_t.shape[0]]
-    if not ok:
-        return out
-    M = np.vstack([np.asarray(values[i], dtype=np.float64) for i in ok])
+def _sketch_rows(vecs: pa.Array, planes_t: np.ndarray) -> pa.Array:
+    """Sign-bit sketches: (n, d) @ (d, P) → packed int64. NULL/odd-length → 0."""
+    out = np.zeros(len(vecs), dtype=np.int64)
+    M, rows, _ = vectors.fixed(vecs, planes_t.shape[0])
     bits = (M @ planes_t) >= 0  # (n_ok, P)
     weights = np.left_shift(np.uint64(1), np.arange(planes_t.shape[1], dtype=np.uint64))
-    out[ok] = (bits.astype(np.uint64) * weights[None, :]).sum(axis=1).view(np.int64)
-    return out
+    out[rows] = (bits.astype(np.uint64) * weights[None, :]).sum(axis=1).view(np.int64)
+    return pa.array(out)
 
 
 def _sketch_udf(planes: np.ndarray):
     key = ("sketch", planes.tobytes())
     if key not in _SIG_UDF_CACHE:
-        from pyspark.sql.functions import pandas_udf
-
         planes_t = np.ascontiguousarray(np.asarray(planes, dtype=np.float64).T)
 
-        @pandas_udf(LongType())
-        def sk(vecs: pd.Series) -> pd.Series:
-            return pd.Series(_sketch_rows(vecs.tolist(), planes_t))
+        @arrow_udf(LongType())
+        def sk(vecs: pa.Array) -> pa.Array:
+            return _sketch_rows(vecs, planes_t)
 
         _SIG_UDF_CACHE[key] = sk
     return _SIG_UDF_CACHE[key]

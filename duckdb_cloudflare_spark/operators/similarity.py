@@ -9,6 +9,11 @@ Scale notes:
 - lsh_topk buckets both sides with a random-hyperplane sketch (with
   multi-probe on the query side) so each query only scores its bucket —
   the 1000-executor plan for corpus × corpus expansion.
+
+Every kernel here is an ``arrow_udf`` or a ``mapInArrow`` function that
+decodes its list columns through ``util/vectors.py``, which states the one
+NULL / wrong-length / NULL-element decode policy; the exact operators
+collect their query side through ``_collect_side``.
 """
 
 from __future__ import annotations
@@ -16,11 +21,11 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import broadcast
-from pyspark.sql.types import ArrayType, IntegerType
+from pyspark.sql.functions import arrow_udf, broadcast
+from pyspark.sql.types import ArrayType, IntegerType, LongType
 from pyspark.sql.window import Window
 
 from duckdb_cloudflare_spark.operators.dedup import (
@@ -28,6 +33,7 @@ from duckdb_cloudflare_spark.operators.dedup import (
     cosine_similarity,
     ensure_parallelism,
 )
+from duckdb_cloudflare_spark.util import vectors
 
 # Bounded (ADVICE r2): hits only matter within one query's corpus/query
 # double use of the same centroids, so a handful of entries suffices; an
@@ -37,39 +43,53 @@ _CELL_UDF_CACHE: dict = {}
 _CELL_UDF_CACHE_MAX = 4
 
 
-def _cell_rows(values: list, cents_t: np.ndarray, n_top: int) -> list:
+def _cell_rows(vecs: pa.Array, cents_t: np.ndarray, n_top: int) -> pa.Array:
     """Top-``n_top`` centroid indices by dot product, one matrix multiply per
-    Arrow batch: (n, d) @ (d, C) → argsort. None/odd-length vectors → []."""
-    n = len(values)
-    out: list = [[] for _ in range(n)]
-    ok = [i for i in range(n) if values[i] is not None and len(values[i]) == cents_t.shape[0]]
-    if not ok:
-        return out
-    M = np.vstack([np.asarray(values[i], dtype=np.float64) for i in ok])
-    S = M @ cents_t  # (n_ok, C)
-    order = np.argsort(-S, axis=1, kind="stable")[:, :n_top]
-    for j, i in enumerate(ok):
-        out[i] = [int(x) for x in order[j]]
-    return out
+    Arrow batch: (n, d) @ (d, C) → argsort. NULL/odd-length vectors → []."""
+    M, rows, _ = vectors.fixed(vecs, cents_t.shape[0])
+    order = np.argsort(-(M @ cents_t), axis=1, kind="stable")[:, :n_top]
+    return vectors.lists(order.astype(np.int32), rows, len(vecs), fill="empty")
 
 
 def _cells_udf(cents: np.ndarray, n_top: int):
-    """Pandas UDF: embedding → top-``n_top`` IVF cells (same vectorized-matmul
+    """Arrow UDF: embedding → top-``n_top`` IVF cells (same vectorized-matmul
     pattern as dedup._sketch_udf; centroids are closure-shipped, tiny)."""
     key = (cents.tobytes(), n_top)
     if key not in _CELL_UDF_CACHE:
-        from pyspark.sql.functions import pandas_udf
-
         cents_t = np.ascontiguousarray(np.asarray(cents, dtype=np.float64).T)
 
-        @pandas_udf(ArrayType(IntegerType()))
-        def cells(vecs: pd.Series) -> pd.Series:
-            return pd.Series(_cell_rows(vecs.tolist(), cents_t, n_top))
+        @arrow_udf(ArrayType(IntegerType()))
+        def cells(vecs: pa.Array) -> pa.Array:
+            return _cell_rows(vecs, cents_t, n_top)
 
         if len(_CELL_UDF_CACHE) >= _CELL_UDF_CACHE_MAX:
             _CELL_UDF_CACHE.pop(next(iter(_CELL_UDF_CACHE)))
         _CELL_UDF_CACHE[key] = cells
     return _CELL_UDF_CACHE[key]
+
+
+def _collect_side(
+    df: DataFrame, op: str, id_col: str, vec_col: str, *extra: str,
+    side: str = "queries",
+) -> list:
+    """The bounded driver-side collect of an exact operator's query (or
+    anchor) side: rows ``(id, vector, *extra)`` sorted by id, rows with a
+    NULL id or vector dropped (as the corpus side drops them). Past
+    ``SPARK_GRAFT_BRUTE_MAX_QUERIES`` rows it fails loudly as a misuse
+    instead of collecting unboundedly into a driver OOM."""
+    cap = int(os.environ.get("SPARK_GRAFT_BRUTE_MAX_QUERIES", "100000"))
+    rows = df.select(id_col, vec_col, *extra).limit(cap + 1).collect()
+    if len(rows) > cap:
+        raise ValueError(
+            f"{op}: {side} side exceeds {cap} rows; this exact operator "
+            f"collects the {side} to the driver — batch them, use lsh_topk/"
+            "ivf_topk for large query sets, or raise "
+            "SPARK_GRAFT_BRUTE_MAX_QUERIES"
+        )
+    return sorted(
+        (r for r in rows if r[0] is not None and r[1] is not None),
+        key=lambda r: r[0],
+    )
 
 
 def brute_force_topk(
@@ -94,28 +114,14 @@ def brute_force_topk(
     # the top-k window shuffle carries a banded per-batch top-(k+1)
     # shortlist of 3 scalar columns (r16), not corpus×queries rows and
     # never embeddings.
-    # The collect is bounded: an oversized queries side must fail loudly as
-    # a misuse (use lsh_topk/ivf_topk for large query sets), not as a
-    # driver OOM.
-    max_q = int(os.environ.get("SPARK_GRAFT_BRUTE_MAX_QUERIES", "100000"))
-    collected = queries.select(query_id, query_vec).limit(max_q + 1).collect()
-    if len(collected) > max_q:
-        raise ValueError(
-            f"brute_force_topk: queries side exceeds {max_q} rows; this exact "
-            "operator collects the query matrix to the driver — use lsh_topk/"
-            "ivf_topk for large query sets, or raise SPARK_GRAFT_BRUTE_MAX_QUERIES"
-        )
-    qrows = sorted(
-        ((int(r[0]), r[1]) for r in collected if r[1] is not None),
-        key=lambda t: t[0],
-    )
+    qrows = _collect_side(queries, "brute_force_topk", query_id, query_vec)
     spark = queries.sparkSession
     if not qrows:
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, cosine_sim double, nn_rank int"
         )
-    qids = [t[0] for t in qrows]
-    Qm = np.asarray([t[1] for t in qrows], dtype=np.float64)  # (m, d)
+    qids = [r[0] for r in qrows]
+    Qm = np.asarray([r[1] for r in qrows], dtype=np.float64)  # (m, d)
     Qt = np.ascontiguousarray(Qm.T)  # (d, m)
     qn = np.maximum(np.linalg.norm(Qm, axis=1), 1e-12)  # (m,)
 
@@ -124,57 +130,50 @@ def brute_force_topk(
     # shortlist PER BATCH instead of posexploding |corpus|×|queries|
     # scalar rows through the JVM window. The band is exact, not
     # approximate: rows are kept when sim·1e6 is within 2 micro-units of
-    # the batch's (k+1)-th largest (k+1 because a query's self-match is
-    # filtered AFTER the kernel, exactly as before); a dropped row has
-    # >= k+1 rows a full micro-unit above it, so after HALF_UP rounding
-    # at 6 dp (which moves a value by at most 0.5+ulp) at least k
-    # non-self rows still rank strictly above it — it can never enter
-    # the rounded top-k, whatever the id tie-breaks do. The JVM then
-    # rounds and ranks the shortlist with the IDENTICAL expressions the
-    # full stream used, so results are bit-for-bit unchanged.
+    # the batch's (k+1)-th largest finite value (k+1 because a query's
+    # self-match is filtered AFTER the kernel, exactly as before); a
+    # dropped row has >= k+1 rows a full micro-unit above it, so after
+    # HALF_UP rounding at 6 dp (which moves a value by at most 0.5+ulp)
+    # at least k non-self rows still rank strictly above it — it can never
+    # enter the rounded top-k, whatever the id tie-breaks do. Non-finite
+    # similarities (a NaN element) are always kept: the JVM ranks NaN
+    # greatest, as Spark and DuckDB order it, so it may well be in the
+    # top-k. The JVM then rounds and ranks the shortlist with the
+    # IDENTICAL expressions the full stream used, so results are
+    # bit-for-bit unchanged.
     kk = k + 1
 
     def _fold(batches):
-        for pdf in batches:
-            vals = pdf["cv"].tolist()
-            ids = pdf["neighbor_id"].to_numpy()
-            n = len(vals)
-            bad = [
-                i
-                for i in range(n)
-                if vals[i] is not None and len(vals[i]) != Qt.shape[0]
-            ]
-            if bad:
+        for rb in batches:
+            cv = rb.column("cv")
+            M, rows, wrong = vectors.fixed(cv, Qt.shape[0])
+            if len(wrong):
                 raise ValueError(
                     f"brute_force_topk: corpus vector dimension "
-                    f"{len(vals[bad[0]])} != query dimension {Qt.shape[0]} — "
-                    "cosine is undefined across dimensions; filter or "
-                    "re-embed the corpus first"
+                    f"{vectors.lengths(cv)[wrong[0]]} != query dimension "
+                    f"{Qt.shape[0]} — cosine is undefined across dimensions; "
+                    "filter or re-embed the corpus first"
                 )
-            ok = [i for i in range(n) if vals[i] is not None]
-            if not ok:
+            if not len(rows):
                 continue
-            M = np.vstack([np.asarray(vals[i], dtype=np.float64) for i in ok])
             cn = np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
             # dot / (|c| * |q|) — the oracle's exact formulation, so the
             # float64 rounding path matches the per-pair scorer bit-for-bit
             S = (M @ Qt) / (cn * qn[None, :])  # (B, m)
             Y = S * 1e6
-            cid = ids[ok].astype(np.int64)
+            cid = rb.column("neighbor_id").to_numpy()[rows].astype(np.int64)
             b = Y.shape[0]
+            fin = np.isfinite(Y)
             if b > kk:
-                # (k+1)-th largest per query (column)
-                kth = np.partition(Y, b - kk, axis=0)[b - kk, :]
-                keep = Y >= kth[None, :] - 2.0
+                # (k+1)-th largest finite value per query (column)
+                kth = np.partition(np.where(fin, Y, -np.inf), b - kk, axis=0)[b - kk, :]
+                keep = ~fin | (Y >= kth[None, :] - 2.0)
             else:
                 keep = np.ones_like(Y, dtype=bool)
             r, q = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "qpos": q.astype(np.int32),
-                    "neighbor_id": cid[r],
-                    "sim": S[r, q],
-                }
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(q.astype(np.int32)), pa.array(cid[r]), pa.array(S[r, q])],
+                names=["qpos", "neighbor_id", "sim"],
             )
 
     c = (
@@ -183,7 +182,7 @@ def brute_force_topk(
         .select(F.col(corpus_id).alias("neighbor_id"), F.col(corpus_vec).alias("cv"))
     )
     scored = (
-        c.mapInPandas(_fold, schema="qpos int, neighbor_id long, sim double")
+        c.mapInArrow(_fold, schema="qpos int, neighbor_id long, sim double")
         .select(
             F.element_at(F.array(*[F.lit(q) for q in qids]), F.col("qpos") + 1).alias(
                 "query_id"
@@ -709,9 +708,6 @@ def jl_project(
     NULL products coalesce to 0, never propagating NULL to the fold)."""
     import hashlib
 
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
-
     signs = [
         [
             1
@@ -738,26 +734,13 @@ def jl_project(
         ),
     )
 
-    @pandas_udf(ArrayType(LongType()))
-    def jl_fold(x: pd.Series) -> pd.Series:
-        vals = x.tolist()
-        if not vals:
-            return pd.Series([], dtype=object)
+    @arrow_udf(ArrayType(LongType()))
+    def jl_fold(x: pa.Array) -> pa.Array:
         # a NULL vector must yield an array of K NULL folds (the old
         # F.array-of-NULL-aggregates shape: posexplode then emits K rows
         # with y NULL — the dirty-data parity sweeps pin this)
-        idx = [i for i, v in enumerate(vals) if v is not None]
-        # per-row lists (ADVICE r15): [[None]*K]*n aliases ONE inner list
-        # across every row — correct only while rows are replaced
-        # wholesale below; any future in-place mutation would corrupt
-        # all NULL rows at once
-        out: list = [[None] * out_dims for _ in vals]
-        if idx:
-            X = np.asarray([vals[i] for i in idx], dtype=np.int64)  # (B', D)
-            Y = (X @ SM_T).tolist()  # exact int64
-            for j, i in enumerate(idx):
-                out[i] = Y[j]
-        return pd.Series(out)
+        X, rows, _ = vectors.fixed(x, in_dims, np.int64)
+        return vectors.lists(X @ SM_T, rows, len(x), fill="nulls")  # exact int64
 
     return (
         df.filter(F.col(id_col).isNotNull())
@@ -814,24 +797,10 @@ def mine_triplets(
     Argmin/argmax via struct ordering, not max_by (tie-nondeterministic):
     positive = min(sim, id); negative = max(sim, -id). Cosine is
     dot/(|c|·|q|) in float64 — p05's oracle-parity formulation —
-    canonicalized at 6 dp as micro-unit bigints, so sims/margins are
+    canonicalized at 6 dp as micro-unit integers, so sims/margins are
     exact-integer-derived doubles (unrounded final divisions, q48)."""
-    import os as _os
-
-    max_a = int(_os.environ.get("SPARK_GRAFT_BRUTE_MAX_QUERIES", "100000"))
-    collected = (
-        anchors.select(id_col, label_col, vec_col).limit(max_a + 1).collect()
-    )
-    if len(collected) > max_a:
-        raise ValueError(
-            f"mine_triplets: anchors side exceeds {max_a} rows; this exact "
-            "miner collects the anchor matrix to the driver — mine "
-            "per-batch slices or feed an ANN shortlist, or raise "
-            "SPARK_GRAFT_BRUTE_MAX_QUERIES"
-        )
-    arows = sorted(
-        ((int(r[0]), r[1], r[2]) for r in collected if r[2] is not None),
-        key=lambda t: t[0],
+    arows = _collect_side(
+        anchors, "mine_triplets", id_col, vec_col, label_col, side="anchors"
     )
     spark = corpus.sparkSession
     if not arows:
@@ -840,29 +809,26 @@ def mine_triplets(
             "anchor_id long, label int, pos_id long, pos_sim double, "
             "neg_id long, neg_sim double, margin double",
         )
-    a_ids = [t[0] for t in arows]
-    a_labels = [t[1] for t in arows]
-    Am = np.asarray([t[2] for t in arows], dtype=np.float64)  # (A, d)
+    a_ids = [r[0] for r in arows]
+    a_labels = [r[2] for r in arows]
+    Am = np.asarray([r[1] for r in arows], dtype=np.float64)  # (A, d)
     At = np.ascontiguousarray(Am.T)  # (d, A)
     an = np.maximum(np.linalg.norm(Am, axis=1), 1e-12)  # (A,)
     a_id_arr = np.asarray(a_ids, dtype=np.int64)
-    _LBL_SENTINEL = np.iinfo(np.int64).min
-    al_arr = np.asarray(
-        [x if x is not None else _LBL_SENTINEL for x in a_labels],
-        dtype=np.int64,
-    )
-    al_ok = al_arr != _LBL_SENTINEL
+    al_ok = np.asarray([x is not None for x in a_labels])
+    al_arr = np.asarray([x or 0 for x in a_labels], dtype=np.int64)
 
     # r16 (guide §2.3, the _pq_lloyd partial-fold precedent): the old
     # shape posexploded |corpus|×|anchors| scalar rows (50 M at the sf1
     # lane) through the JVM partial min/max aggregate. The kernel now
     # folds per-anchor candidates ITSELF and emits only a bounded
     # shortlist per batch: for each anchor, every same-label row within
-    # 2 micro-units of the batch-min similarity (kind 1), every
-    # different-label row within 2 of the batch-max (kind 2), plus one
-    # presence marker per anchor per partition (kind 0 — an anchor with
-    # candidates in neither class must still appear, with NULL pos/neg).
-    # The band is EXACT, not approximate: the JVM re-derives
+    # 2 micro-units of the batch-min finite similarity (kind 1), every
+    # different-label row within 2 of the batch-max (kind 2), every
+    # non-finite one (the JVM orders NaN greatest, as for brute_force_topk),
+    # plus one presence marker per anchor per partition (kind 0 — an
+    # anchor with candidates in neither class must still appear, with NULL
+    # pos/neg). The band is EXACT, not approximate: the JVM re-derives
     # __nm = round(sim·1e6) from the pass-through float64 sim and takes
     # the true struct min/max over the shortlist — a row excluded by the
     # band is > 1 full micro-unit away from the batch extreme, so its
@@ -870,49 +836,31 @@ def mine_triplets(
     # value by at most 0.5+ulp). Ties (replicated vectors) all fall
     # inside the band and keep the deterministic (nm, cand_id) break.
     def _fold(batches):
-        for pdf in batches:
-            vals = pdf["__vec"].tolist()
-            ids = pdf["cand_id"].to_numpy()
-            lbls = pdf["__cl"].tolist()
-            n = len(vals)
-            ok = [
-                i
-                for i in range(n)
-                if vals[i] is not None and len(vals[i]) == At.shape[0]
-            ]
-            if not ok:
+        for rb in batches:
+            M, rows, _ = vectors.fixed(rb.column("__vec"), At.shape[0])
+            if not len(rows):
                 continue
-            M = np.vstack([np.asarray(vals[i], dtype=np.float64) for i in ok])
             cn = np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
             S = (M @ At) / (cn * an[None, :])  # (B, A) float64
             Y = S * 1e6  # the exact double the JVM rounds
-            cid = ids[ok].astype(np.int64)
-            # NULL labels arrive as NaN through pandas (int col with
-            # nulls upcasts to float64), not None — pd.isna covers both
-            cl = np.asarray(
-                [
-                    _LBL_SENTINEL if pd.isna(lbls[i]) else int(lbls[i])
-                    for i in ok
-                ],
-                dtype=np.int64,
-            )
-            cl_ok = cl != _LBL_SENTINEL
+            fin = np.isfinite(Y)
+            cid = rb.column("cand_id").to_numpy()[rows].astype(np.int64)
+            lbl = rb.column("__cl")
+            cl_ok = np.asarray(lbl.is_valid())[rows]
+            cl = np.asarray(lbl.fill_null(0), dtype=np.int64)[rows]
             not_self = cid[:, None] != a_id_arr[None, :]  # (B, A)
             lbl_both = cl_ok[:, None] & al_ok[None, :]
             same = lbl_both & (cl[:, None] == al_arr[None, :]) & not_self
             diff = lbl_both & (cl[:, None] != al_arr[None, :]) & not_self
             out_a, out_k, out_i, out_s = [], [], [], []
-            for mask, kind, extreme in ((same, 1, "min"), (diff, 2, "max")):
+            # the hardest positive minimises Y, the hardest negative
+            # maximises it: band both as minima of sign·Y (negation is exact)
+            for mask, kind, sign in ((same, 1, 1.0), (diff, 2, -1.0)):
                 if not mask.any():
                     continue
-                if extreme == "min":
-                    Ym = np.where(mask, Y, np.inf)
-                    col = Ym.min(axis=0)
-                    keep = mask & (Ym <= col[None, :] + 2.0)
-                else:
-                    Ym = np.where(mask, Y, -np.inf)
-                    col = Ym.max(axis=0)
-                    keep = mask & (Ym >= col[None, :] - 2.0)
+                Z = sign * Y
+                edge = np.where(mask & fin, Z, np.inf).min(axis=0)
+                keep = mask & (~fin | (Z <= edge[None, :] + 2.0))
                 r, a = np.nonzero(keep)
                 out_a.append(a)
                 out_k.append(np.full(len(a), kind, dtype=np.int32))
@@ -924,15 +872,14 @@ def mine_triplets(
             out_k.append(np.zeros(len(pres), dtype=np.int32))
             out_i.append(np.zeros(len(pres), dtype=np.int64))
             out_s.append(np.zeros(len(pres), dtype=np.float64))
-            apos = np.concatenate(out_a).astype(np.int32)
-            kind = np.concatenate(out_k)
-            yield pd.DataFrame(
-                {
-                    "apos": apos,
-                    "kind": kind,
-                    "cand_id": np.concatenate(out_i),
-                    "sim": np.concatenate(out_s),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.concatenate(out_a).astype(np.int32)),
+                    pa.array(np.concatenate(out_k)),
+                    pa.array(np.concatenate(out_i)),
+                    pa.array(np.concatenate(out_s)),
+                ],
+                names=["apos", "kind", "cand_id", "sim"],
             )
 
     lbl_arr = F.array(
@@ -950,7 +897,7 @@ def mine_triplets(
             F.col(label_col).alias("__cl"),
             F.col(vec_col).alias("__vec"),
         )
-        .mapInPandas(
+        .mapInArrow(
             _fold, schema="apos int, kind int, cand_id long, sim double"
         )
     )
@@ -959,7 +906,9 @@ def mine_triplets(
         F.element_at(lbl_arr, F.col("apos") + 1).alias("label"),
         "kind",
         "cand_id",
-        F.round(F.col("sim") * F.lit(1e6), 0).cast("long").alias("__nm"),
+        # a double, not a bigint: NaN must order greatest, not overflow
+        # the cast (finite values are exact integers either way)
+        F.round(F.col("sim") * F.lit(1e6), 0).alias("__nm"),
     )
     pos = F.min(
         F.when(F.col("kind") == 1, F.struct(F.col("__nm"), F.col("cand_id")))
@@ -979,12 +928,10 @@ def mine_triplets(
         "anchor_id",
         "label",
         F.col("__p.cand_id").alias("pos_id"),
-        (F.col("__p.__nm").cast("double") / F.lit(1e6)).alias("pos_sim"),
+        (F.col("__p.__nm") / F.lit(1e6)).alias("pos_sim"),
         (-F.col("__n.nid")).alias("neg_id"),
-        (F.col("__n.__nm").cast("double") / F.lit(1e6)).alias("neg_sim"),
-        (
-            (F.col("__p.__nm") - F.col("__n.__nm")).cast("double") / F.lit(1e6)
-        ).alias("margin"),
+        (F.col("__n.__nm") / F.lit(1e6)).alias("neg_sim"),
+        ((F.col("__p.__nm") - F.col("__n.__nm")) / F.lit(1e6)).alias("margin"),
     )
 
 
@@ -1013,25 +960,18 @@ def _pq_assign_udf(
     and ``np.argmin`` returns the FIRST minimum, which is exactly the
     (dist, cid) lexicographic tie-break of the struct-min form and of
     the SQL oracle's ``row_number() OVER (ORDER BY dist, cid)``."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import LongType
-
     C = np.zeros((m, k, sub_dims), dtype=np.int64)
     for (s, cid), vals in code.items():
         C[s, cid] = vals
 
-    @pandas_udf(ArrayType(LongType()))
-    def assign(xm: pd.Series) -> pd.Series:
-        vals = xm.tolist()
-        if not vals:
-            return pd.Series([], dtype=object)
-        X = np.asarray(vals, dtype=np.int64).reshape(
-            len(vals), m, 1, sub_dims
-        )
+    @arrow_udf(ArrayType(LongType()))
+    def assign(xm: pa.Array) -> pa.Array:
+        X, _, _ = vectors.fixed(xm, m * sub_dims, np.int64)
+        X = X.reshape(len(X), m, 1, sub_dims)
         D = ((X - C[None]) ** 2).sum(axis=3)  # (batch, m, k), exact int64
         cids = D.argmin(axis=2)  # first min == lowest cid on ties
         errs = np.take_along_axis(D, cids[:, :, None], axis=2)[:, :, 0]
-        return pd.Series(np.concatenate([cids, errs], axis=1).tolist())
+        return vectors.lists(np.concatenate([cids, errs], axis=1))
 
     return assign
 
@@ -1119,9 +1059,9 @@ def _pq_lloyd(
     ``(B, d_in) -> (B, m*sub_dims)`` applied INSIDE the stats kernel
     (and to the seed matrix driver-side). IVF-PQ passes the
     cell-assign-and-subtract residual map here, so its residual fit
-    reads the PURE-JVM base instead of chaining a pandas_udf into the
-    stats mapInPandas — a chained ArrowEvalPython → MapInPandas stage
-    cannot fuse into one Python runner (consecutive pandas_udfs can)
+    reads the PURE-JVM base instead of chaining a UDF into the stats
+    map — a chained ArrowEvalPython → MapInArrow stage cannot fuse into
+    one Python runner (consecutive Arrow UDFs can)
     and measured a 26.7 s first-run / 4.2 s-per-job penalty at the sf1
     lane. Same math, same argmin tie-breaks, zero extra corpus passes.
     ``seed_rows``: pre-collected _pq_seed_rows(base, >=k) so callers
@@ -1175,6 +1115,7 @@ def _pq_lloyd_impl(
             f"{m * sub_dims} dims (got {len(seeds)})"
         )
     seed_mat = np.asarray([list(r["xm"]) for r in seeds], dtype=np.int64)
+    d_in = seed_mat.shape[1]  # the base's fixed width (before ``pre``)
     if pre is not None:
         seed_mat = pre(seed_mat)
     code: dict[tuple[int, int], list[int]] = {}
@@ -1207,15 +1148,14 @@ def _pq_lloyd_impl(
             sx = np.zeros((m, k, sub_dims), dtype=np.int64)
             n = np.zeros((m, k), dtype=np.int64)
             seen = False
-            for pdf in it:
-                vals = pdf["xm"].tolist()
-                if not vals:
+            for rb in it:
+                X, _, _ = vectors.fixed(rb.column("xm"), d_in, np.int64)
+                if not len(X):
                     continue
                 seen = True
-                X = np.asarray(vals, dtype=np.int64)
                 if pre is not None:
                     X = pre(X)  # e.g. IVF residuals — exact int64
-                X = X.reshape(len(vals), m, 1, sub_dims)
+                X = X.reshape(len(X), m, 1, sub_dims)
                 D = ((X - C[None]) ** 2).sum(axis=3)  # exact int64
                 cids = D.argmin(axis=2)  # (B, m) — first-min tie-break
                 Xs = X[:, :, 0, :]  # (B, m, sub_dims)
@@ -1225,16 +1165,18 @@ def _pq_lloyd_impl(
             if not seen:
                 return
             s_i, c_i = np.nonzero(n)  # only observed (subspace, cid) groups
-            rows = {
-                "subspace": np.repeat(s_i, sub_dims).astype("int32"),
-                "cid": np.repeat(c_i, sub_dims).astype("int32"),
-                "pos": np.tile(np.arange(sub_dims, dtype="int32"), len(s_i)),
-                "sx": sx[s_i, c_i].ravel(),
-                "n": np.repeat(n[s_i, c_i], sub_dims),
-            }
-            yield pd.DataFrame(rows)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.repeat(s_i, sub_dims).astype(np.int32)),
+                    pa.array(np.repeat(c_i, sub_dims).astype(np.int32)),
+                    pa.array(np.tile(np.arange(sub_dims, dtype=np.int32), len(s_i))),
+                    pa.array(sx[s_i, c_i].ravel()),
+                    pa.array(np.repeat(n[s_i, c_i], sub_dims)),
+                ],
+                names=["subspace", "cid", "pos", "sx", "n"],
+            )
 
-        partials = base.select("xm").mapInPandas(
+        partials = base.select("xm").mapInArrow(
             _partial_stats,
             schema="subspace int, cid int, pos int, sx long, n long",
         )
@@ -1403,7 +1345,7 @@ def pq_topk(
     sub_dims: int = 16,
     kc: int = 8,
     n_iters: int = 2,
-    _qrows: list[tuple[int, list[int]]] | None = None,
+    _qrows: list | None = None,
 ) -> DataFrame:
     """PQ serving-side search: asymmetric distance computation (ADC —
     Jégou et al. 2011 §IV-A, FAISS ``IndexPQ.search``). Trains the
@@ -1427,9 +1369,6 @@ def pq_topk(
     driver-side, capped by SPARK_GRAFT_BRUTE_MAX_QUERIES). Determinism
     (hash-gradable): all-integer micro² distances; np.argmin first-min
     == (dist, cid) ties; top-k ties break on neighbor_id."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import LongType
-
     base, code = _pq_fit(corpus, corpus_vec, corpus_id, m, sub_dims, kc, n_iters)
     spark = corpus.sparkSession
     empty = "query_id long, neighbor_id long, adc_dist_micro2 long, nn_rank int"
@@ -1439,55 +1378,34 @@ def pq_topk(
     for (s, cid), vals in code.items():
         C[s, cid] = vals
 
-    # query vectors ride the IDENTICAL Spark-side micro-int
-    # canonicalization as the corpus (F.round HALF_UP — a driver-side
-    # Python round() would banker's-round and diverge on exact halves)
-    qb = _pq_base(queries, query_vec, query_id, m * sub_dims, out_id="qid")
-    max_q = int(os.environ.get("SPARK_GRAFT_BRUTE_MAX_QUERIES", "100000"))
     if _qrows is None:
-        # bounded by contract (brute idiom)
-        qrows = qb.limit(max_q + 1).collect()
-        if len(qrows) > max_q:
-            raise ValueError(
-                f"pq_topk: queries side exceeds {max_q} rows; ADC builds one "
-                "m*kc LUT per query driver-side — batch the query set, or "
-                "raise SPARK_GRAFT_BRUTE_MAX_QUERIES"
-            )
-        qrows = sorted((int(r["qid"]), r["xm"]) for r in qrows)
-    else:
-        # pq_rerank_topk shares its ALREADY-collected (and identically
-        # canonicalized) query rows — one bounded collect instead of two
-        # identical jobs (r15)
-        qrows = _qrows
-        if len(qrows) > max_q:
-            raise ValueError(
-                f"pq_topk: queries side exceeds {max_q} rows; ADC builds one "
-                "m*kc LUT per query driver-side — batch the query set, or "
-                "raise SPARK_GRAFT_BRUTE_MAX_QUERIES"
-            )
-    if not qrows:
+        # query vectors ride the IDENTICAL Spark-side micro-int
+        # canonicalization as the corpus (F.round HALF_UP — a driver-side
+        # Python round() would banker's-round and diverge on exact halves);
+        # pq_rerank_topk passes its already-collected rows instead
+        qb = _pq_base(queries, query_vec, query_id, m * sub_dims, out_id="qid")
+        _qrows = _collect_side(qb, "pq_topk", "qid", "xm")
+    if not _qrows:
         return spark.createDataFrame([], empty)
-    qids = [q for q, _ in qrows]
-    Q = np.asarray([x for _, x in qrows], dtype=np.int64).reshape(
+    qids = [r[0] for r in _qrows]
+    Q = np.asarray([r[1] for r in _qrows], dtype=np.int64).reshape(
         len(qids), m, 1, sub_dims
     )
     # (Q, m, kc): exact int64 squared L2 between query subvectors and
     # every centroid — max term (2e6)^2 * 16 ≈ 6.4e13 * kc ≪ 2^63
     LUT = ((Q - C[None]) ** 2).sum(axis=3)
 
-    @pandas_udf(ArrayType(LongType()))
-    def adc(xm: pd.Series) -> pd.Series:
-        vals = xm.tolist()
-        if not vals:
-            return pd.Series([], dtype=object)
-        X = np.asarray(vals, dtype=np.int64).reshape(len(vals), m, 1, sub_dims)
+    @arrow_udf(ArrayType(LongType()))
+    def adc(xm: pa.Array) -> pa.Array:
+        X, _, _ = vectors.fixed(xm, m * sub_dims, np.int64)
+        X = X.reshape(len(X), m, 1, sub_dims)
         D = ((X - C[None]) ** 2).sum(axis=3)  # (B, m, kc)
         codes = D.argmin(axis=2)  # (B, m) — first-min tie-break
         # ADC gather: dist[b, q] = Σ_s LUT[q, s, codes[b, s]]
-        out = np.zeros((len(vals), len(qids)), dtype=np.int64)
+        out = np.zeros((len(X), len(qids)), dtype=np.int64)
         for s in range(m):
             out += LUT[:, s, :][:, codes[:, s]].T  # (B, Q)
-        return pd.Series(out.tolist())
+        return vectors.lists(out)
 
     scored = (
         base.select(F.col("vec_id").alias("neighbor_id"), "xm")
@@ -1544,19 +1462,14 @@ def pq_rerank_topk(
     batch against the closure-held query matrix, and takes the final
     top-k on the bounded result. Determinism: every number is an exact
     int64; both stages tie-break on neighbor_id."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import LongType
-
     spark = corpus.sparkSession
     empty = "query_id long, neighbor_id long, l2_dist_micro2 long, nn_rank int"
+    d = m * sub_dims
     # build the query micro-int matrix ONCE (same canonicalization, same
     # bounded-collect contract) and SHARE it with stage 1 — the old shape
     # ran two identical bounded-collect jobs (r15)
-    qb = _pq_base(queries, query_vec, query_id, m * sub_dims, out_id="qid")
-    max_q = int(os.environ.get("SPARK_GRAFT_BRUTE_MAX_QUERIES", "100000"))
-    qrows = sorted(
-        (int(r["qid"]), r["xm"]) for r in qb.limit(max_q + 1).collect()
-    )
+    qb = _pq_base(queries, query_vec, query_id, d, out_id="qid")
+    qrows = _collect_side(qb, "pq_rerank_topk", "qid", "xm")
     if not qrows:
         return spark.createDataFrame([], empty)
     cand = pq_topk(
@@ -1564,38 +1477,25 @@ def pq_rerank_topk(
         corpus_id=corpus_id, query_vec=query_vec, query_id=query_id,
         m=m, sub_dims=sub_dims, kc=kc, n_iters=n_iters, _qrows=qrows,
     ).select("query_id", "neighbor_id")
-    qids = [q for q, _ in qrows]
-    qpos = {q: i for i, q in enumerate(qids)}
-    Qm = np.asarray([x for _, x in qrows], dtype=np.int64)  # (Q, d)
+    qpos = {r[0]: i for i, r in enumerate(qrows)}
+    Qm = np.asarray([r[1] for r in qrows], dtype=np.int64)  # (Q, d)
 
-    @pandas_udf(LongType())
-    def exact_d(qp: pd.Series, xm: pd.Series) -> pd.Series:
-        qi = qp.to_numpy()
-        X = np.asarray(xm.tolist(), dtype=np.int64)
-        if X.size == 0:
-            return pd.Series([], dtype="int64")
-        D = ((X - Qm[qi]) ** 2).sum(axis=1)
-        return pd.Series(D)
+    @arrow_udf(LongType())
+    def exact_d(qp: pa.Array, xm: pa.Array) -> pa.Array:
+        X, _, _ = vectors.fixed(xm, d, np.int64)
+        return pa.array(((X - Qm[np.asarray(qp)]) ** 2).sum(axis=1))
 
     # base vectors for the candidates only: broadcast the bounded Q×R
-    # shortlist into the corpus scan — no corpus shuffle
-    base = (
-        corpus.filter(F.col(corpus_id).isNotNull())
-        .select(
-            F.col(corpus_id).alias("neighbor_id"),
-            F.transform(
-                F.slice(F.col(corpus_vec), 1, m * sub_dims),
-                lambda x: F.round(x.cast("double") * F.lit(1e6), 0).cast("long"),
-            ).alias("cxm"),
-        )
-    )
+    # shortlist into the corpus scan — no corpus shuffle. The shared PQ
+    # base keeps only clean d-element rows, like stage 1's.
+    base = _pq_base(corpus, corpus_vec, corpus_id, d, out_id="neighbor_id")
     qpos_map = F.create_map(
         *[x for q, i in qpos.items() for x in (F.lit(q), F.lit(i))]
     )
     joined = base.join(broadcast(cand), "neighbor_id").select(
         "query_id", "neighbor_id",
         exact_d(
-            F.element_at(qpos_map, F.col("query_id")), F.col("cxm")
+            F.element_at(qpos_map, F.col("query_id")), F.col("xm")
         ).alias("l2_dist_micro2"),
     )
     w = Window.partitionBy("query_id").orderBy("l2_dist_micro2", "neighbor_id")
@@ -1647,8 +1547,8 @@ def ivfpq_topk(
     ≤ n_cells·d and m·kc·sub_dims rows) and share ONE seed collect (the
     seed order depends only on vec_id — r15); the corpus crosses the
     Arrow boundary in MAP-ONLY passes, each a SINGLE un-chained Python
-    stage (r15: the residual used to be a separate pandas_udf feeding
-    the fit/scorer — a chained ArrowEvalPython → MapInPandas stage
+    stage (r15: the residual used to be a separate Arrow UDF feeding
+    the fit/scorer — a chained ArrowEvalPython → MapInArrow stage
     cannot fuse into one Python runner and measured 26.7 s first-run /
     4.2 s steady at the sf1 lane; now cell-assign+subtract runs INSIDE
     the fit kernel via _pq_lloyd(pre=...) and inside the scorer) — zero
@@ -1656,9 +1556,6 @@ def ivfpq_topk(
     top-k window over the bounded query set. At serving scale the cell
     structure also prunes the scan: only rows whose cell is probed
     score (non-probed rows emit nothing), which is the IVF speedup."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import LongType
-
     d = m * sub_dims
     empty = "query_id long, neighbor_id long, ivfpq_dist_micro2 long, nn_rank int"
     spark = corpus.sparkSession
@@ -1704,19 +1601,10 @@ def ivfpq_topk(
         RC[s, cid] = vals
 
     qb = _pq_base(queries, query_vec, query_id, d, out_id="qid")
-    max_q = int(os.environ.get("SPARK_GRAFT_BRUTE_MAX_QUERIES", "100000"))
-    qrows = sorted(
-        (int(r["qid"]), r["xm"]) for r in qb.limit(max_q + 1).collect()
-    )
-    if len(qrows) > max_q:
-        raise ValueError(
-            f"ivfpq_topk: queries side exceeds {max_q} rows; probing "
-            "builds n_probe LUTs per query driver-side — batch the "
-            "query set, or raise SPARK_GRAFT_BRUTE_MAX_QUERIES"
-        )
+    qrows = _collect_side(qb, "ivfpq_topk", "qid", "xm")
     if not qrows:
         return spark.createDataFrame([], empty)
-    qids = [q for q, _ in qrows]
+    qids = [r[0] for r in qrows]
     # per query: n_probe nearest cells by exact coarse distance, then one
     # (m, kc) residual-ADC LUT per probed cell — all bounded driver work
     probed: list[list[tuple[int, np.ndarray]]] = []
@@ -1730,16 +1618,13 @@ def ivfpq_topk(
             plist.append((cell, ((qres - RC) ** 2).sum(axis=2)))
         probed.append(plist)
 
-    @pandas_udf(ArrayType(LongType()))
-    def score(xm: pd.Series) -> pd.Series:
+    @arrow_udf(ArrayType(LongType()))
+    def score(xm: pa.Array) -> pa.Array:
         # ONE un-chained kernel: cell assign + residual + code assign +
         # probed ADC (r15 — the cell/residual used to arrive from a
-        # separate pandas_udf stage; see the chaining note above)
-        vals = xm.tolist()
-        if not vals:
-            return pd.Series([], dtype=object)
-        B = len(vals)
-        Xf = np.asarray(vals, dtype=np.int64)  # (B, d)
+        # separate UDF stage; see the chaining note above)
+        Xf, _, _ = vectors.fixed(xm, d, np.int64)  # (B, d)
+        B = len(Xf)
         Dc = ((Xf[:, None, :] - CC[None]) ** 2).sum(axis=2)
         cells = Dc.argmin(axis=1)  # first-min == (dist, cid) ties
         X = (Xf - CC[cells]).reshape(B, m, 1, sub_dims)
@@ -1753,7 +1638,7 @@ def ivfpq_topk(
                     for sp in range(m):
                         s += lut[sp, codes[mask, sp]]
                     out[mask, qi] = s
-        return pd.Series(out.tolist())
+        return vectors.lists(out)
 
     scored = (
         base.select(

@@ -62,42 +62,6 @@ def fingerprint(text: Column) -> Column:
     return F.md5(normalize_text(text))
 
 
-def with_quality_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append quality-scoring columns (length / punctuation / stopword ratios,
-    token statistics). Pure map-side; no shuffle."""
-    t = F.col(text_col)
-    toks = tokens(t)
-    n_chars = F.length(t).cast("bigint")
-    n_tokens = F.size(toks).cast("bigint")
-    n_space = n_chars - F.length(F.regexp_replace(t, r"\s", "")).cast("bigint")
-    n_punct = F.length(t) - F.length(F.regexp_replace(t, r"[^\w\s]", "")).cast("bigint")
-    n_alpha = F.length(F.regexp_replace(t, r"[^A-Za-z]", "")).cast("bigint")
-    en_stop = F.array(*[F.lit(s) for s in STOPWORDS["en"]])
-    n_stop = F.size(F.filter(toks, lambda tok: F.array_contains(en_stop, F.lower(tok))))
-    return (
-        df.withColumn("n_chars", n_chars)
-        .withColumn("n_tokens", n_tokens)
-        .withColumn(
-            "avg_token_len",
-            F.when(n_tokens > 0, (n_chars - n_space).cast("double") / n_tokens).otherwise(
-                F.lit(0.0)
-            ),
-        )
-        .withColumn(
-            "punct_ratio",
-            F.when(n_chars > 0, n_punct.cast("double") / n_chars).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "alpha_ratio",
-            F.when(n_chars > 0, n_alpha.cast("double") / n_chars).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "stopword_ratio",
-            F.when(n_tokens > 0, n_stop.cast("double") / n_tokens).otherwise(F.lit(0.0)),
-        )
-    )
-
-
 def lang_scores(text: Column) -> Column:
     """Map lang → stopword-hit count for the heuristic language identifier."""
     toks = F.transform(tokens(text), lambda tok: F.lower(tok))
@@ -120,10 +84,6 @@ def identify_language(text: Column) -> Column:
         *[F.when(scores[F.lit(lang)] == best, F.lit(lang)) for lang in langs]
     )
     return F.when(best > 0, winner).otherwise(F.lit("und"))
-
-
-def with_language(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
-    return df.withColumn(out_col, identify_language(F.col(text_col)))
 
 
 def _word_ngrams(ts: Column, n: int) -> Column:

@@ -5,7 +5,6 @@ from duckdb_cloudflare_spark.plans.introspect import (  # noqa: F401
     broadcast_join_count,
     codegen_stage_count,
     formatted_plan,
-    plan_report,
     pushed_filters,
     read_schemas,
     shuffle_count,

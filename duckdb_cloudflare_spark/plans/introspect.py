@@ -72,13 +72,3 @@ def shuffle_count(df: DataFrame) -> int:
 def broadcast_join_count(df: DataFrame) -> int:
     return len(_operator_ids(df, "BroadcastHashJoin|BroadcastNestedLoopJoin"))
 
-
-def plan_report(df: DataFrame) -> dict:
-    """One-call summary used by tests and by humans iterating on a plan."""
-    return {
-        "pushed_filters": pushed_filters(df),
-        "read_schemas": read_schemas(df),
-        "codegen_stages": codegen_stage_count(df),
-        "shuffles": shuffle_count(df),
-        "broadcast_joins": broadcast_join_count(df),
-    }

@@ -88,12 +88,3 @@ class CollInfoCatalog:
             out.append(info.id)
         return out
 
-
-_global_catalog: CollInfoCatalog | None = None
-
-
-def global_catalog() -> CollInfoCatalog:
-    global _global_catalog
-    if _global_catalog is None:
-        _global_catalog = CollInfoCatalog()
-    return _global_catalog

@@ -1114,10 +1114,10 @@ def test_p119_triplet_mining_matmul_no_join_map_side_argminmax(spark, registry):
     df = registry["p119_triplet_mining"](spark, SF_DIR)
     plan = formatted_plan(df)
     assert "Window" not in plan and "Join" not in plan
-    # r16: the matmul stage is a MapInPandas kernel that ALSO folds the
+    # r16: the matmul stage is a MapInArrow kernel that ALSO folds the
     # per-anchor candidates (banded shortlist out, not corpus×anchors
     # rows); the struct min/max still collapses map-side above it
-    assert "MapInPandas" in plan  # the one matmul+fold stage
+    assert "MapInArrow" in plan  # the one matmul+fold stage
     assert "BatchEvalPython" not in plan
     assert "partial_min" in plan and "partial_max" in plan
     assert shuffle_count(df) <= 2  # parallelism split + the anchor agg

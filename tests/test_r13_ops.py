@@ -137,7 +137,7 @@ def test_bpe_train_plan_is_pure_jvm(spark):
 
     df = spark.createDataFrame([("low lower",)], "text string")
     plan = formatted_plan(bpe_train(df, n_merges=2))
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow"):
         assert marker not in plan
     # per-iteration argmax is a 1-row broadcast, never a sort-merge join
     assert "SortMergeJoin" not in plan
@@ -278,7 +278,7 @@ def test_multimodal_report_single_decode_plan(spark):
     # AND in the numbered details section — match the detail headers)
     n_python = len(
         re.findall(
-            r"^\(\d+\) (?:MapInPandas|ArrowEvalPython|BatchEvalPython)",
+            r"^\(\d+\) (?:MapInPandas|MapInArrow|ArrowEvalPython|BatchEvalPython)",
             plan,
             re.MULTILINE,
         )
@@ -420,7 +420,7 @@ def test_bpe_token_counts_plan_is_pure_jvm(spark):
 
     df = spark.createDataFrame([("low lower",)], "text string")
     plan = formatted_plan(bpe_token_counts(df, n_merges=2))
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow"):
         assert marker not in plan
     assert "SortMergeJoin" not in plan
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -186,3 +187,163 @@ def test_pq_assign_dirty(dirty):
         (7, 0, 1, 76250000000), (7, 1, 1, 0),
         (8, 0, 0, 312500000000), (8, 1, 0, 35156250000),
     ]
+
+
+# ---------------------------------------------------------------------------
+# Non-finite similarities and NULL query/anchor ids
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture
+def one_batch(spark):
+    """Frames coalesced to one partition reach the kernel as ONE Arrow
+    batch (ensure_parallelism would otherwise split ten rows into batches
+    too small for the shortlist band to engage)."""
+    spark.conf.set("spark.duckdb_cloudflare.assumeParallel", "true")
+    yield lambda rows, schema: spark.createDataFrame(rows, schema).coalesce(1)
+    spark.conf.unset("spark.duckdb_cloudflare.assumeParallel")
+
+
+VEC2 = "vec_id long, embedding array<double>"
+NAN = float("nan")
+
+
+def _brute(spark, corpus, k=2, queries=((100, [1.0, 0.0]),)):
+    q = spark.createDataFrame(list(queries), VEC2)
+    return [
+        tuple(_canon(list(r)))
+        for r in S.brute_force_topk(q, corpus, k=k).orderBy("query_id", "nn_rank").collect()
+    ]
+
+
+def test_brute_force_nan_rows_keep_their_band(spark, one_batch):
+    finite = [(i, [1.0, 0.1 * i]) for i in range(7)]
+    nans = [(10 + i, [NAN, 1.0]) for i in range(3)]
+    got = _brute(spark, one_batch(finite + nans, VEC2))
+    # the JVM ranks NaN greatest, so the k=2 answer is two NaN rows
+    assert got == [(100, 10, "nan", 1), (100, 11, "nan", 2)]
+
+
+def test_brute_force_single_nan_row_ranks_first(spark, one_batch):
+    finite = [(i, [1.0, 0.1 * i]) for i in range(9)]
+    got = _brute(spark, one_batch(finite + [(20, [NAN, 1.0])], VEC2))
+    assert got == [(100, 20, "nan", 1), (100, 0, 1.0, 2)]
+
+
+def test_mine_triplets_nan_row_does_not_hide_the_band(spark, one_batch):
+    schema = "vec_id long, embedding array<double>, label int"
+    corpus = one_batch(
+        [
+            (0, [1.0, 0.0], 1),
+            (1, [0.9, 0.1], 1),
+            (2, [0.5, 0.5], 1),
+            (3, [NAN, 1.0], 1),  # NaN orders greatest: never the min positive
+            (4, [0.0, 1.0], 2),
+            (5, [0.7, 0.7], 2),
+        ],
+        schema,
+    )
+    anchors = spark.createDataFrame([(0, [1.0, 0.0], 1)], schema)
+    [r] = S.mine_triplets(corpus, anchors).collect()
+    assert (r["pos_id"], r["pos_sim"], r["neg_id"], r["neg_sim"]) == (
+        2, 0.707107, 5, 0.707107,
+    )
+
+
+def test_brute_force_null_query_id_dropped(spark):
+    corpus = spark.createDataFrame([(10, [1.0, 0.0]), (11, [0.0, 1.0])], VEC2)
+    got = _brute(spark, corpus, queries=((None, [1.0, 0.0]), (0, [1.0, 0.0])))
+    assert got == [(0, 10, 1.0, 1), (0, 11, 0.0, 2)]
+
+
+def test_mine_triplets_null_anchor_id_dropped(spark):
+    schema = "vec_id long, embedding array<double>, label int"
+    corpus = spark.createDataFrame(
+        [(0, [1.0, 0.0], 1), (1, [0.6, 0.8], 1), (2, [0.8, 0.6], 2)], schema
+    )
+    anchors = spark.createDataFrame(
+        [(None, [1.0, 0.0], 1), (0, [1.0, 0.0], 1)], schema
+    )
+    got = [tuple(r) for r in S.mine_triplets(corpus, anchors).collect()]
+    assert got == [(0, 1, 1, 0.6, 2, 0.8, -0.2)]
+
+
+# ---------------------------------------------------------------------------
+# util/vectors.py: the Arrow list codec
+# ---------------------------------------------------------------------------
+
+
+def test_fixed_honours_slice_offset():
+    from duckdb_cloudflare_spark.util import vectors
+
+    arr = pa.array(
+        [[1, 2], [3, 4], None, [5, 6, 7], [8, 9]], pa.list_(pa.float32())
+    ).slice(1, 4)
+    M, rows, wrong = vectors.fixed(arr, 2)
+    assert M.dtype == np.float64 and M.flags.c_contiguous
+    assert M.tolist() == [[3.0, 4.0], [8.0, 9.0]]
+    assert rows.tolist() == [0, 3] and wrong.tolist() == [2]
+    assert vectors.lengths(arr).tolist() == [2, -1, 3, 2]
+    M, rows, _ = vectors.fixed(arr.slice(3), 2)  # all rows valid, still offset
+    assert M.tolist() == [[8.0, 9.0]] and rows.tolist() == [0]
+    lens, flat = vectors.ragged(pa.array([[7], None, [], [1, 2]], pa.list_(pa.int64())).slice(1))
+    assert lens.tolist() == [0, 0, 2] and flat.tolist() == [1, 2]
+
+
+@pytest.mark.parametrize("arr", [
+    pa.array([None, None], pa.list_(pa.float32())),
+    pa.array([], pa.list_(pa.float32())),
+], ids=["all_null", "empty"])
+def test_fixed_and_ragged_without_valid_rows(arr):
+    from duckdb_cloudflare_spark.util import vectors
+
+    M, rows, wrong = vectors.fixed(arr, 4)
+    assert M.shape == (0, 4) and len(rows) == 0 and len(wrong) == 0
+    lens, flat = vectors.ragged(arr)
+    assert lens.tolist() == [0] * len(arr) and len(flat) == 0
+    out = vectors.lists(np.zeros((0, 3), np.int64), rows, len(arr))
+    assert out.to_pylist() == [None] * len(arr)
+
+
+def test_fixed_float32_matches_asarray_bit_for_bit():
+    from duckdb_cloudflare_spark.util import vectors
+
+    rng = np.random.RandomState(0)
+    rows = [list(r) for r in rng.standard_normal((50, 64)).astype(np.float32)]
+    rows[7][3] = None  # NULL element → NaN, as np.asarray makes it
+    arr = pa.array(rows, pa.list_(pa.float32()))
+    M, idx, _ = vectors.fixed(arr, 64)
+    old = np.asarray([np.asarray(r, dtype=np.float64) for r in arr.to_pylist()])
+    assert idx.tolist() == list(range(50))
+    assert np.array_equal(M.view(np.uint64), old.view(np.uint64))
+
+
+def test_lists_fill_modes():
+    from duckdb_cloudflare_spark.util import vectors
+
+    M = np.array([[1, 2], [3, 4]], dtype=np.int64)
+    rows = np.array([0, 2])
+    assert vectors.lists(M, rows, 3).to_pylist() == [[1, 2], None, [3, 4]]
+    assert vectors.lists(M, rows, 3, fill="empty").to_pylist() == [[1, 2], [], [3, 4]]
+    assert vectors.lists(M, rows, 3, fill="nulls").to_pylist() == [
+        [1, 2], [None, None], [3, 4],
+    ]
+    assert vectors.lists(M).type == pa.list_(pa.int64())
+
+
+def test_kernel_modules_decode_only_through_the_codec():
+    """No vector kernel decodes list columns its own way, and only the
+    shared collect reads the query-side cap."""
+    import inspect
+
+    for mod in (S, D):
+        src = inspect.getsource(mod)
+        for banned in ("pandas_udf", "mapInPandas", "np.vstack"):
+            assert banned not in src, (mod.__name__, banned)
+    src = inspect.getsource(S)
+    reads = src.count('environ.get("SPARK_GRAFT_BRUTE_MAX_QUERIES"')
+    assert reads == 1
+    assert 'environ.get("SPARK_GRAFT_BRUTE_MAX_QUERIES"' in inspect.getsource(
+        S._collect_side
+    )
+    assert "SPARK_GRAFT_BRUTE_MAX_QUERIES" not in inspect.getsource(D)
