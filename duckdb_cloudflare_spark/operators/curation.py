@@ -21,6 +21,7 @@ from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
 from duckdb_cloudflare_spark.operators import dedup as D
+from duckdb_cloudflare_spark.operators.text_analysis import join_window, ngram_windows
 
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
@@ -335,10 +336,8 @@ def split_leakage_report(
         D.lowered_tokens(text_col).alias("ts"),
     )
     sh = d.select(
-        id_col,
-        "split",
-        F.explode(D.word_shingle_strings(shingle_k)).alias("sh"),
-    )
+        id_col, "split", F.explode(ngram_windows(F.col("ts"), shingle_k)).alias("w")
+    ).select(id_col, "split", join_window(F.col("w"), shingle_k).alias("sh"))
     train_sh = (
         sh.filter(F.col("split") == "train").select("sh").distinct()
         .withColumn("__hit", F.lit(1))

@@ -32,8 +32,11 @@ from pyspark.storagelevel import StorageLevel
 
 from duckdb_cloudflare_spark.operators.text_analysis import (
     fingerprint,
+    join_window,
+    ngram_windows,
     normalize_text,
     tokens,
+    word_ngrams,
 )
 from duckdb_cloudflare_spark.util import vectors
 
@@ -85,20 +88,12 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 
 
 def shingles(text: Column, k: int = 3) -> Column:
-    """Word k-shingles as strings (space-joined), distinct. Empty text → [].
-
-    Built from k array slices folded with zip_with (O(k) array passes per
-    doc) rather than transform-over-positions with a slice per position
-    (O(n·k) interpreted ops) — measured ~1.7× faster; higher-order
-    functions run interpreted, so pass count is what matters."""
+    """Word k-shingles as strings (space-joined), distinct, in first-
+    occurrence order. Empty or NULL text → []; a text of 1..k-1 tokens is
+    ONE shingle, the whole (space-joined) text."""
     toks = tokens(text)
     n = F.size(toks)
-    m = F.greatest(n - (k - 1), F.lit(0))  # number of shingles
-    sh = F.slice(toks, 1, m)
-    for offset in range(2, k + 1):
-        nxt = F.slice(toks, offset, m)
-        sh = F.zip_with(sh, nxt, lambda acc, w: F.concat_ws(" ", acc, w))
-    return F.when(n >= k, F.array_distinct(sh)).otherwise(
+    return F.when(n >= k, F.array_distinct(word_ngrams(toks, k))).otherwise(
         F.when(n > 0, F.array(F.concat_ws(" ", toks))).otherwise(
             F.array().cast("array<string>")
         )
@@ -882,10 +877,10 @@ def duplicated_ngram_stats(
     the bench box); the window shares ONE map pass and one exchange —
     measured 25.8 s → 4.3 s at the sf1 lane, rows identical. The
     exchange is sized from the input's own partitioning
-    (max(shuffle.partitions, input partitions) — the _pair_intersections
-    rule). Never a quadratic pair blow-up — this never materializes doc
-    pairs, unlike Jaccard; a hot shingle ("click here to subscribe") is
-    one window group, bounded by the docs that actually contain it.
+    (``_exchange_width``, shared with _pair_intersections). Never a
+    quadratic pair blow-up — this never materializes doc pairs, unlike
+    Jaccard; a hot shingle ("click here to subscribe") is one window
+    group, bounded by the docs that actually contain it.
 
     Docs with fewer than k tokens are excluded (no k-shingles to score).
 
@@ -898,18 +893,12 @@ def duplicated_ngram_stats(
 
     n_toks = F.size(tokens(F.col(text_col)))
     src = ensure_parallelism(df)
-    shins = src.filter(n_toks >= k).select(
-        id_col, shingles(F.lower(F.col(text_col)), k).alias("sh")
+    inv = (
+        src.filter(n_toks >= k)
+        .select(id_col, F.explode(shingles(F.lower(F.col(text_col)), k)).alias("sh"))
+        .select(id_col, F.xxhash64("sh").alias("shingle"))
     )
-    inv = shins.select(
-        id_col,
-        F.explode(F.transform(F.col("sh"), lambda s: F.xxhash64(s))).alias("shingle"),
-    )
-    try:
-        sp = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        sp = 200
-    inv = inv.repartition(max(sp, src.rdd.getNumPartitions()), "shingle")
+    inv = inv.repartition(_exchange_width(src), "shingle")
     scored = inv.withColumn(
         "n_docs_with", F.count(F.lit(1)).over(_W.partitionBy("shingle"))
     )
@@ -989,22 +978,11 @@ def dup_span_stats(
         .select(id_col, toks.alias("ts"))
     )
     # (doc, pos, shingle-hash) for EVERY position (not distinct — spans need
-    # positions); hash built from the same ' '-joined k-gram as p34/p36.
-    # Total (see hashed_word_shingles): safe under predicate pushdown.
-    sh_at = F.when(
-        F.size("ts") >= k,
-        F.transform(
-            F.sequence(F.lit(0), F.size("ts") - k),
-            lambda i: F.xxhash64(
-                F.concat_ws(
-                    " ", *[F.element_at(F.col("ts"), i + j + 1) for j in range(k)]
-                )
-            ),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
+    # positions); hash built from the same ' '-joined k-gram as p34/p36,
+    # after the explode.
     pos = base.select(
-        id_col, F.posexplode(sh_at).alias("pos", "sh")
-    )
+        id_col, F.posexplode(ngram_windows(F.col("ts"), k)).alias("pos", "w")
+    ).select(id_col, "pos", F.xxhash64(join_window(F.col("w"), k)).alias("sh"))
     dup_sh = (
         pos.select("sh", id_col)
         .distinct()
@@ -1056,7 +1034,8 @@ def chunk_digests(
     n_chunks = ((F.size(ts) + F.lit(chunk_tokens - 1)) / F.lit(chunk_tokens)).cast(
         "long"
     )
-    # Total (see hashed_word_shingles): safe under predicate pushdown.
+    # Total (the when-guard keeps sequence() ascending on any row Catalyst
+    # evaluates it on): safe under predicate pushdown.
     digests = F.when(
         F.size(ts) >= 1,
         F.transform(
@@ -1067,12 +1046,7 @@ def chunk_digests(
         ),
     ).otherwise(F.array().cast("array<string>"))
     return (
-        df.select(
-            id_col,
-            F.transform(
-                F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: F.lower(x)
-            ).alias("ts"),
-        )
+        df.select(id_col, lowered_tokens(text_col).alias("ts"))
         .filter(F.size("ts") >= 1)
         .select(id_col, F.posexplode(digests).alias("chunk_idx", "h"))
     )
@@ -1119,39 +1093,23 @@ def md5_minhash_sigs(
 ) -> DataFrame:
     """Cross-engine-reproducible minhash signatures: per doc, the min of
     ``md5(seed || ':' || shingle)`` over its distinct word-``shingle_k``
-    shingles, for ``k`` seeds — a minhash whose every byte DuckDB can
+    shingles (a min, so repeated shingles need no per-doc de-duplication),
+    for ``k`` seeds — a minhash whose every byte DuckDB can
     recompute (unlike the production xxhash64+numpy path in
     ``minhash_signature``, whose permutation constants live Python-side).
     Returns ``(doc_id, s0..s{k-1})``; the agreement fraction between two
     docs' signature rows is the standard unbiased Jaccard estimate.
 
     One groupBy computes all ``k`` mins in a single partial-aggregated
-    shuffle; everything before it is map-side codegen (split, transform,
+    shuffle; everything before it is map-side codegen (split, slices,
     md5). Used by p48 to put the minhash estimation math itself under the
     DuckDB hash check."""
-    ts = F.col("ts")
-    # Total (see hashed_word_shingles): safe under predicate pushdown.
-    shins = F.when(
-        F.size(ts) >= shingle_k,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(ts) - shingle_k),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(ts, i + j + 1) for j in range(shingle_k)]
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     inv = (
         ensure_parallelism(df)
-        .select(
-            id_col,
-            F.transform(
-                F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: F.lower(x)
-            ).alias("ts"),
-        )
+        .select(id_col, lowered_tokens(text_col).alias("ts"))
         .filter(F.size("ts") >= shingle_k)
-        .select(id_col, F.explode(shins).alias("shingle"))
+        .select(id_col, F.explode(ngram_windows(F.col("ts"), shingle_k)).alias("w"))
+        .select(id_col, join_window(F.col("w"), shingle_k).alias("shingle"))
     )
     return inv.groupBy(id_col).agg(
         *[
@@ -1161,39 +1119,24 @@ def md5_minhash_sigs(
     )
 
 
-def hashed_word_shingles(k: int = 3) -> Column:
-    """Distinct xxhash64 keys of ' '-joined word-``k`` shingles over a
-    lowered token array column named ``ts`` (p34's oracle-exact
-    formulation) — 8-byte shuffle keys instead of strings; the string-keyed
-    oracle parity gates catch any count-perturbing collision."""
-    ts = F.col("ts")
-    # TOTAL expression (the when-guard, not the caller's filter, is what
-    # makes it safe): Catalyst pushes derived predicates on the shingle
-    # column below the caller's size(ts) >= k filter, so this expression
-    # CAN be evaluated on shorter arrays — where sequence(0, size-k) turns
-    # descending and element_at goes out of bounds (an executor error
-    # under ANSI mode). Guarding here keeps any evaluation order safe.
-    return F.when(
-        F.size(ts) >= k,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(ts) - k),
-                lambda i: F.xxhash64(
-                    F.concat_ws(
-                        " ", *[F.element_at(ts, i + j + 1) for j in range(k)]
-                    )
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-
-
 def lowered_tokens(text_col: str = "text") -> Column:
-    """Raw split-then-lower tokenization (p34's oracle-exact formulation:
-    blank text yields one empty token, matching DuckDB string_split_regex)."""
-    return F.transform(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: F.lower(x)
-    )
+    """Raw lower-then-split tokenization (p34's oracle-exact formulation:
+    blank text yields one empty token, matching DuckDB string_split_regex).
+    Lowering the whole text before the split is token-for-token the same
+    as lowering each token — no character lowers to or from whitespace —
+    and needs no per-token lambda."""
+    return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+
+
+def _exchange_width(src: DataFrame) -> int:
+    """Width of a shingle- or pair-keyed exchange, sized from the input's
+    own partitioning: ``max(spark.sql.shuffle.partitions, input
+    partitions)`` — scale-adaptive, not a box constant."""
+    try:
+        sp = int(src.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        sp = 200
+    return max(sp, src.rdd.getNumPartitions())
 
 
 def _doc_freq_filter(
@@ -1253,18 +1196,17 @@ def _pair_intersections(
     shins = (
         src.select(id_col, lowered_tokens(text_col).alias("ts"))
         .filter(F.size("ts") >= k)
-        .select(id_col, hashed_word_shingles(k).alias("sh"))
+        .select(id_col, F.array_distinct(word_ngrams(F.col("ts"), k)).alias("sh"))
     )
-    # n_sh below the explode so Generate never carries the array (r15)
-    inv = shins.select(id_col, "sh", F.size("sh").alias("n_sh")).select(
-        id_col, F.explode("sh").alias("shingle"), "n_sh"
+    # n_sh below the explode so Generate never carries the array (r15);
+    # the 8-byte key is hashed after it
+    inv = (
+        shins.select(id_col, "sh", F.size("sh").alias("n_sh"))
+        .select(id_col, F.explode("sh").alias("g"), "n_sh")
+        .select(id_col, F.xxhash64("g").alias("shingle"), "n_sh")
     )
     inv = _doc_freq_filter(inv, prefilter_singletons, max_doc_freq)
-    try:
-        sp = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        sp = 200
-    n_pair = max(sp, src.rdd.getNumPartitions())
+    n_pair = _exchange_width(src)
     inv = inv.repartition(n_pair, "shingle")
     a = inv.select(F.col(id_col).alias("id_a"), "shingle", F.col("n_sh").alias("n_a"))
     b = inv.select(
@@ -1395,25 +1337,6 @@ def epoch_shard_assign(
     )
 
 
-def word_shingle_strings(k: int = 3) -> Column:
-    """Distinct ' '-joined word-``k`` shingle STRINGS over a lowered token
-    array column named ``ts`` — the unhashed sibling of
-    ``hashed_word_shingles`` for operators whose oracle needs the literal
-    shingle (p73 exact MinHash). Same total-expression guard."""
-    ts = F.col("ts")
-    return F.when(
-        F.size(ts) >= k,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(ts) - k),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(ts, i + j + 1) for j in range(k)]
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def minhash_signatures_exact(
     df: DataFrame,
     text_col: str = "text",
@@ -1447,8 +1370,8 @@ def minhash_signatures_exact(
         F.size(F.col("ts")) >= shingle_k
     )
     ex = d.select(
-        "doc_id", F.explode(word_shingle_strings(shingle_k)).alias("sh")
-    )
+        "doc_id", F.explode(ngram_windows(F.col("ts"), shingle_k)).alias("w")
+    ).select("doc_id", join_window(F.col("w"), shingle_k).alias("sh"))
     hashes = [
         F.conv(
             F.substring(
@@ -1505,8 +1428,8 @@ def shingle_df_histogram(
         ensure_parallelism(df)
         .select(id_col, lowered_tokens(text_col).alias("ts"))
         .filter(F.size("ts") >= k)
-        .select(F.explode(hashed_word_shingles(k)).alias("shingle"))
-        .groupBy("shingle")
+        .select(F.explode(F.array_distinct(word_ngrams(F.col("ts"), k))).alias("g"))
+        .groupBy(F.xxhash64("g").alias("shingle"))
         .agg(F.count(F.lit(1)).alias("df"))
     )
     # ⌊log2(df)⌋ via integer arithmetic both engines share: the bit length
@@ -1736,11 +1659,15 @@ def decontamination_stats(
             .select(id_col, lowered_tokens(text_col).alias("ts"))
             .filter(F.size("ts") >= k)
         )
-        if keep_id:
+        ts = F.col("ts")
+        if keep_id:  # n_ngrams counts DISTINCT n-grams
             return shins.select(
-                id_col, F.explode(hashed_word_shingles(k)).alias("g")
-            )
-        return shins.select(F.explode(hashed_word_shingles(k)).alias("g"))
+                id_col, F.explode(F.array_distinct(word_ngrams(ts, k))).alias("s")
+            ).select(id_col, F.xxhash64("s").alias("g"))
+        # the eval side is de-duplicated by the caller's distinct()
+        return shins.select(F.explode(ngram_windows(ts, k)).alias("w")).select(
+            F.xxhash64(join_window(F.col("w"), k)).alias("g")
+        )
 
     ev = _grams(eval_df, keep_id=False).distinct().withColumn("hit", F.lit(1))
     if broadcast_eval:

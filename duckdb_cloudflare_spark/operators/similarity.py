@@ -76,7 +76,10 @@ def _collect_side(
     anchor) side: rows ``(id, vector, *extra)`` sorted by id, rows with a
     NULL id or vector dropped (as the corpus side drops them). Past
     ``SPARK_GRAFT_BRUTE_MAX_QUERIES`` rows it fails loudly as a misuse
-    instead of collecting unboundedly into a driver OOM."""
+    instead of collecting unboundedly into a driver OOM. A repeated id is
+    the same kind of misuse: the top-k windows rank per id, so two rows
+    with one id would return each neighbor once per copy and crowd out
+    the rest."""
     cap = int(os.environ.get("SPARK_GRAFT_BRUTE_MAX_QUERIES", "100000"))
     rows = df.select(id_col, vec_col, *extra).limit(cap + 1).collect()
     if len(rows) > cap:
@@ -86,10 +89,14 @@ def _collect_side(
             "ivf_topk for large query sets, or raise "
             "SPARK_GRAFT_BRUTE_MAX_QUERIES"
         )
-    return sorted(
+    out = sorted(
         (r for r in rows if r[0] is not None and r[1] is not None),
         key=lambda r: r[0],
     )
+    for a, b in zip(out, out[1:]):
+        if a[0] == b[0]:
+            raise ValueError(f"{op}: duplicate {side} id {a[0]}")
+    return out
 
 
 def brute_force_topk(

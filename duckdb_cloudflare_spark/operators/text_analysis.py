@@ -36,6 +36,40 @@ def tokens(text: Column) -> Column:
     )
 
 
+def ngram_windows(arr: Column, n: int) -> Column:
+    """Every length-``n`` window of ``arr``, in order, as an array of
+    structs with fields ``"0"`` .. ``"n-1"`` — THE n-gram primitive every
+    shingle, n-gram and bigram builder shares.
+
+    Built as ``arrays_zip`` of ``n`` slices whose length clamps at
+    ``greatest(size - n + 1, 0)``: native array ops, no lambda, any
+    element type. The expression is TOTAL — empty, shorter-than-``n`` and
+    NULL arrays give ``[]`` / ``[]`` / NULL, never an out-of-bounds index
+    — so it is safe wherever Catalyst moves it (an inferred or pushed-down
+    filter may evaluate it on rows the caller's own size filter would
+    have dropped, where a positional ``element_at`` would fault under
+    ANSI). Join or hash a window AFTER exploding it
+    (``join_window``): the per-row work then stays an ordinary codegen
+    projection instead of an interpreted per-element lambda."""
+    if n < 1:
+        raise ValueError(f"ngram_windows: n must be >= 1, got {n}")
+    m = F.greatest(F.size(arr) - (n - 1), F.lit(0))
+    return F.arrays_zip(*[F.slice(arr, j + 1, m) for j in range(n)])
+
+
+def join_window(w: Column, n: int) -> Column:
+    """The ' '-joined string of one ``ngram_windows`` window of words."""
+    return F.concat_ws(" ", *[w[str(j)] for j in range(n)])
+
+
+def word_ngrams(ts: Column, n: int) -> Column:
+    """Space-joined word ``n``-grams of a token array, in order (``[]``
+    when it has fewer than ``n`` tokens). Use it where the strings must
+    be de-duplicated per row (``array_distinct``) before an explode;
+    otherwise explode ``ngram_windows`` and ``join_window`` after."""
+    return F.transform(ngram_windows(ts, n), lambda w: join_window(w, n))
+
+
 def bpe_ish_tokens(text: Column) -> Column:
     """BPE-ish sub-word split: runs of letters, runs of digits, or single
     non-alphanumeric-non-space characters (a common pre-tokenizer regex)."""
@@ -64,7 +98,7 @@ def fingerprint(text: Column) -> Column:
 
 def lang_scores(text: Column) -> Column:
     """Map lang → stopword-hit count for the heuristic language identifier."""
-    toks = F.transform(tokens(text), lambda tok: F.lower(tok))
+    toks = tokens(F.lower(text))
     entries = []
     for lang, words in STOPWORDS.items():
         wordlist = F.array(*[F.lit(w) for w in words])
@@ -84,15 +118,6 @@ def identify_language(text: Column) -> Column:
         *[F.when(scores[F.lit(lang)] == best, F.lit(lang)) for lang in langs]
     )
     return F.when(best > 0, winner).otherwise(F.lit("und"))
-
-
-def _word_ngrams(ts: Column, n: int) -> Column:
-    """Space-joined word n-grams from a token array (empty when < n tokens)."""
-    cols = [F.slice(ts, i + 1, F.greatest(F.size(ts) - n + 1, F.lit(0))) for i in range(n)]
-    out = cols[0]
-    for nxt in cols[1:]:
-        out = F.zip_with(out, nxt, lambda a, b: F.concat_ws(" ", a, b))
-    return out
 
 
 def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -139,27 +164,23 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     def _tag(n: int):
         # NB: the lambda must take ONE arg — a second parameter would be
         # bound to transform()'s element INDEX, not a closure default.
-        # Grams are reduced to xxhash64 at the explode (p34's shuffle-key
-        # trick: 8-byte keys instead of ~20-60-char strings, measured
-        # ~18% faster end-to-end). A 64-bit collision would have to land
-        # inside ONE document at the SAME n to merge two counts — and the
-        # string-keyed oracle parity gate would catch exactly that.
         return F.transform(
-            _word_ngrams(F.col("ts"), n),
-            lambda g: F.struct(
-                F.lit(n).alias("n"),
-                F.xxhash64(g).alias("gh"),
-                F.length(g).alias("glen"),
-            ),
+            ngram_windows(F.col("ts"), n),
+            lambda w: F.struct(F.lit(n).alias("n"), join_window(w, n).alias("g")),
         )
 
+    # Grams are reduced to xxhash64 after the explode (p34's shuffle-key
+    # trick: 8-byte keys instead of ~20-60-char strings, measured ~18%
+    # faster end-to-end). A 64-bit collision would have to land inside
+    # ONE document at the SAME n to merge two counts — and the
+    # string-keyed oracle parity gate would catch exactly that.
     tagged = F.concat(_tag(2), _tag(3), _tag(5))
     counts = (
         base.select("doc_id", "total_chars", F.explode(tagged).alias("g"))
         .select(
             "doc_id", "total_chars",
-            F.col("g.n").alias("n"), F.col("g.gh").alias("gh"),
-            F.col("g.glen").alias("glen"),
+            F.col("g.n").alias("n"), F.xxhash64("g.g").alias("gh"),
+            F.length("g.g").alias("glen"),
         )
         .groupBy("doc_id", "total_chars", "n", "gh")
         .agg(F.count(F.lit(1)).alias("cnt"), F.first("glen").alias("glen"))
@@ -257,6 +278,15 @@ def clean_unicode(text: Column) -> Column:
     return F.trim(F.regexp_replace(t, r"\s+", " "))
 
 
+def _bucket(tok: Column, n_buckets: int) -> Column:
+    """A token's hash bucket: first 8 hex digits of md5(lower(tok))
+    mod ``n_buckets`` (the p57/p70/p83 cross-engine idiom)."""
+    return (
+        F.conv(F.substring(F.md5(F.lower(tok)), 1, 8), 16, 10).cast("long")
+        % n_buckets
+    )
+
+
 def dsir_weights(
     df: DataFrame,
     target: Column,
@@ -305,10 +335,7 @@ def dsir_weights(
     ).select(
         id_col,
         "__t",
-        (
-            F.conv(F.substring(F.md5(F.lower("tok")), 1, 8), 16, 10).cast("long")
-            % n_buckets
-        ).alias("bucket"),
+        _bucket(F.col("tok"), n_buckets).alias("bucket"),
     )
     bcounts = toks.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("raw_n"),
@@ -605,33 +632,19 @@ def vocab_growth_curve(
     cross join, never a collect.
     """
     nd = df.agg((F.max(id_col) + 1).alias("_nd"))
-    lt = F.transform(tokens(F.col(text_col)), lambda x: F.lower(x))
-    # Gram identity is an 8-byte xxhash64 key, not the string: the curve
-    # only COUNTS distinct grams, and counts per distinct gram are
-    # hash-independent absent collisions (the p93/p34 parity argument —
-    # the string-keyed oracle fails the hash gate if a collision ever
-    # perturbs a count). The n-gram windows are built with
-    # arrays_zip-of-slices (native array ops) and hashed AFTER the
-    # explode as an ordinary codegen expression — a per-element
-    # xxhash64-inside-transform lambda goes through the interpreted
-    # higher-order path and measured 20x slower (8.05 -> 0.41 s at
-    # sf0.1). slice lengths clamp via greatest(.., 0), so the expression
-    # is TOTAL on short arrays (no sequence(), no p34 ANSI hazard).
-    if ngram <= 1:
-        exploded = df.select(
-            F.col(id_col).alias("_id"), F.explode(lt).alias("_t0")
-        )
-        key = F.xxhash64("_t0")
-    else:
-        n_win = F.greatest(F.size(lt) - (ngram - 1), F.lit(0))
-        zipped = F.arrays_zip(
-            *[F.slice(lt, j + 1, n_win) for j in range(ngram)]
-        )
-        exploded = df.select(
-            F.col(id_col).alias("_id"), F.explode(zipped).alias("_bg")
-        )
-        key = F.xxhash64(*[F.col("_bg")[str(j)] for j in range(ngram)])
-    toks = exploded.select("_id", key.alias("tok"))
+    # Gram identity is an 8-byte xxhash64 key of the joined gram, not the
+    # string: the curve only COUNTS distinct grams, and counts per
+    # distinct gram are hash-independent absent collisions (the p93/p34
+    # parity argument — the string-keyed oracle fails the hash gate if a
+    # collision ever perturbs a count). Hashed AFTER the explode as an
+    # ordinary codegen expression — a per-element xxhash64-inside-
+    # transform lambda goes through the interpreted higher-order path and
+    # measured 20x slower (8.05 -> 0.41 s at sf0.1).
+    n = max(ngram, 1)
+    toks = df.select(
+        F.col(id_col).alias("_id"),
+        F.explode(ngram_windows(tokens(F.lower(F.col(text_col))), n)).alias("_g"),
+    ).select("_id", F.xxhash64(join_window(F.col("_g"), n)).alias("tok"))
     # min-bucket == bucket-of-min-id (slice membership is monotone in id),
     # so aggregate the min id FIRST and bucket on the vocab-sized result:
     # the broadcast scalar join touches |vocab| rows, not the corpus, and
@@ -678,27 +691,12 @@ def pmi_collocations(
     final selection is a distributed TakeOrdered(top_k), never a global
     sort.
     """
-    lt = df.select(
-        F.transform(tokens(F.col(text_col)), lambda x: F.lower(x)).alias("ts")
-    ).filter(F.size("ts") >= 2)
-    # TOTAL expression (when-guard, not just the caller's filter): Catalyst
-    # can push derived predicates below the size filter, where
-    # sequence(0, size-2) turns descending on 1-token arrays and
-    # element_at faults under ANSI — the p34 hazard class.
-    bg = lt.select(
-        F.explode(
-            F.when(
-                F.size("ts") >= 2,
-                F.transform(
-                    F.sequence(F.lit(0), F.size("ts") - 2),
-                    lambda i: F.struct(
-                        F.element_at("ts", i + 1).alias("w1"),
-                        F.element_at("ts", i + 2).alias("w2"),
-                    ),
-                ),
-            )
-        ).alias("bg")
-    ).select("bg.w1", "bg.w2")
+    lt = df.select(tokens(F.lower(F.col(text_col))).alias("ts")).filter(
+        F.size("ts") >= 2
+    )
+    bg = lt.select(F.explode(ngram_windows(F.col("ts"), 2)).alias("bg")).select(
+        F.col("bg")["0"].alias("w1"), F.col("bg")["1"].alias("w2")
+    )
     cab = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_ab"))
     ca = cab.groupBy("w1").agg(F.sum("n_ab").alias("_n_a"))
     cb = cab.groupBy("w2").agg(F.sum("n_ab").alias("_n_b"))
@@ -1163,8 +1161,8 @@ def bigram_xent(
     to 1/B exactly (coalesce both counts to 0).
 
     Scale shape (r16 reshape — measured 6.4 s → 1.3 s at the sf1 lane):
-    bigrams are built MAP-SIDE per document (zip of the TOKEN array with
-    its own tail — no positional self-join, no window), exploded once,
+    bigrams are built MAP-SIDE per document (``ngram_windows`` of the
+    TOKEN array — no positional self-join, no window), exploded once,
     and the md5 bucket hash runs as a whole-stage-codegen projection
     ABOVE the explode (the p115/p105 rule: expression work inside a
     higher-order ``transform`` is INTERPRETED; each token is now hashed
@@ -1190,9 +1188,6 @@ def bigram_xent(
     from duckdb_cloudflare_spark.util.caching import one_slot_persist
 
     micro = float(10**round_dp)
-    bucket = lambda c: (  # noqa: E731 — the p57/p70/p83 cross-engine idiom
-        F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long") % n_buckets
-    )
     tk = tokens(F.col(text_col))
     pairs = (
         df.select(
@@ -1200,22 +1195,14 @@ def bigram_xent(
         )
         .filter(F.size("tk") >= 2)
         .select(
-            id_col,
-            "__t",
-            F.explode(
-                F.zip_with(
-                    F.slice("tk", 1, F.size("tk") - 1),
-                    F.slice("tk", 2, F.size("tk") - 1),
-                    lambda a, b: F.struct(a.alias("t1"), b.alias("t2")),
-                )
-            ).alias("pr"),
+            id_col, "__t", F.explode(ngram_windows(F.col("tk"), 2)).alias("pr")
         )
         # codegen hashing above the explode (see the docstring's r16 note)
         .select(
             id_col,
             "__t",
-            bucket(F.lower(F.col("pr.t1"))).alias("h1"),
-            bucket(F.lower(F.col("pr.t2"))).alias("h2"),
+            _bucket(F.col("pr")["0"], n_buckets).alias("h1"),
+            _bucket(F.col("pr")["1"], n_buckets).alias("h2"),
         )
     )
     pairs = one_slot_persist("bigram_xent.pairs", pairs)
@@ -1277,26 +1264,13 @@ def bigram_model(
     import math as _math
 
     micro = float(10**round_dp)
-    bk = F.transform(
-        tokens(F.col(text_col)),
-        lambda t: F.conv(F.substring(F.md5(F.lower(t)), 1, 8), 16, 10).cast(
-            "long"
-        )
-        % n_buckets,
+    d = df.select(
+        target.cast("boolean").alias("__t"), tokens(F.col(text_col)).alias("tk")
+    ).filter(F.col("__t") & (F.size("tk") >= 2))
+    pairs = d.select(F.explode(ngram_windows(F.col("tk"), 2)).alias("pr")).select(
+        _bucket(F.col("pr")["0"], n_buckets).alias("h1"),
+        _bucket(F.col("pr")["1"], n_buckets).alias("h2"),
     )
-    d = df.select(target.cast("boolean").alias("__t"), bk.alias("bk")).filter(
-        F.col("__t") & (F.size("bk") >= 2)
-    )
-    n1 = F.size(F.col("bk")) - 1
-    pairs = d.select(
-        F.explode(
-            F.zip_with(
-                F.slice("bk", 1, n1),
-                F.slice("bk", 2, n1),
-                lambda a, b: F.struct(a.alias("h1"), b.alias("h2")),
-            )
-        ).alias("pr")
-    ).select(F.col("pr.h1").alias("h1"), F.col("pr.h2").alias("h2"))
     cb = pairs.groupBy("h1", "h2").agg(F.count(F.lit(1)).alias("cb"))
     # c(h1,.) = sum_h2 c(h1,h2) exactly — derived from the B²-bounded
     # bigram table, never a second corpus pass (bigram_xent's r13 probe

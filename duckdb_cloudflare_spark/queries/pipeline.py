@@ -588,13 +588,7 @@ def p21_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
     t = F.split(F.trim(F.col("text")), " ")
     base = d.select("doc_id", t.alias("t")).filter(F.size("t") > 1)
-    bigrams = F.transform(
-        F.arrays_zip(
-            F.slice(F.col("t"), 1, F.size("t") - 1),
-            F.slice(F.col("t"), 2, F.size("t") - 1),
-        ),
-        lambda p: F.concat_ws(" ", p["0"], p["1"]),
-    )
+    bigrams = T.word_ngrams(F.col("t"), 2)
     ratios = base.select(
         "doc_id",
         F.col("t"),

@@ -113,22 +113,16 @@ def p39_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="BPE merge step 1: corpus-wide adjacent-token-pair counts, "
     "top 40 by frequency (tie-broken by bigram for determinism) — the "
     "vocabulary-induction shape above p16's unigram vocab. Map-side "
-    "zip_with bigram construction, one partial-aggregated shuffle, "
+    "ngram_windows bigram construction, one partial-aggregated shuffle, "
     "TakeOrdered top-k (never a global sort of the full pair table).",
 )
 def p40_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
-    ts = F.col("ts")
-    n = F.size(ts)
-    bigrams = F.zip_with(
-        F.slice(ts, 1, n - 1), F.slice(ts, 2, n - 1),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
     return (
         d.select(T.tokens(F.lower(F.col("text"))).alias("ts"))
         .filter(F.size("ts") >= 2)
-        .select(F.explode(bigrams).alias("bigram"))
-        .groupBy("bigram")
+        .select(F.explode(T.ngram_windows(F.col("ts"), 2)).alias("w"))
+        .groupBy(T.join_window(F.col("w"), 2).alias("bigram"))
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.col("cnt").desc(), F.col("bigram"))
         .limit(40)
@@ -404,12 +398,15 @@ def p45_kmeans_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p46_doc_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
-    shins = (
+    inv = (
         d.select("doc_id", D.lowered_tokens().alias("ts"))
         .filter(F.size("ts") >= 3)
-        .select("doc_id", D.hashed_word_shingles(3).alias("sh"))
+        .select(
+            "doc_id",
+            F.explode(F.array_distinct(T.word_ngrams(F.col("ts"), 3))).alias("s"),
+        )
+        .select("doc_id", F.xxhash64("s").alias("shingle"))
     )
-    inv = shins.select("doc_id", F.explode("sh").alias("shingle"))
     first = inv.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     novel = (F.col("first_doc") == F.col("doc_id")).cast("int")
     return (
@@ -646,19 +643,7 @@ def p50_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
     ts = F.col("ts")
-    n = F.size(ts)
     toks = d.select("doc_id", D.lowered_tokens().alias("ts"))
-    # Total (see dedup.hashed_word_shingles): safe under predicate pushdown.
-    pairs = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(0), n - 2),
-            lambda i: F.struct(
-                F.element_at(ts, i + 1).alias("w1"),
-                F.element_at(ts, i + 2).alias("w2"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
     # Per-doc bigram multiplicities: dedups instance rows map-side (doc_id
     # is in the grouping key, so partial aggregation collapses each doc's
     # repeats before the shuffle) — every downstream join and the final
@@ -667,11 +652,9 @@ def p50_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange of this subtree, which the planner shares (ReusedExchange —
     # pinned in test_plans.py), so no persist barrier is needed.
     bd = (
-        toks.filter(n >= 2)
-        .select("doc_id", F.explode(pairs).alias("p"))
-        .groupBy(
-            "doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2")
-        )
+        toks.filter(F.size(ts) >= 2)
+        .select("doc_id", F.explode(T.ngram_windows(ts, 2)).alias("p"))
+        .groupBy("doc_id", F.col("p")["0"].alias("w1"), F.col("p")["1"].alias("w2"))
         .agg(F.count(F.lit(1)).alias("m"))
     )
     c1 = (
@@ -747,7 +730,8 @@ def p51_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     srcsh = (
         d.select("source", D.lowered_tokens().alias("ts"))
         .filter(F.size("ts") >= 5)
-        .select("source", F.explode(D.hashed_word_shingles(5)).alias("shingle"))
+        .select("source", F.explode(T.ngram_windows(F.col("ts"), 5)).alias("w"))
+        .select("source", F.xxhash64(T.join_window(F.col("w"), 5)).alias("shingle"))
         .distinct()
     )
     a = srcsh.select(F.col("source").alias("src_a"), "shingle")

@@ -34,17 +34,17 @@ _DEFAULTS = {
     # Python DataSource pushFilters support (off by default in Spark 4.1).
     "spark.sql.python.filterPushdown.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    # InferFiltersFromGenerate + CollapseProject is pathological for this
-    # workload (r10 profiled find): exploding an ALIASED expensive array
-    # (the tokenize→shingle→hash expressions every dedup engine builds)
-    # infers `size(arr) > 0 AND isnotnull(arr)` and then inlines the FULL
-    # expression into that Filter — with the tokenizer re-inlined into
-    # every element_at, i.e. O(shingles × k) re-evaluations per row.
-    # Measured at the sf1 lane: the p93 doc-frequency agg 13.9 s → 0.8 s
-    # (17×) with the rule excluded; p34/p87/p91 share the shape. The
-    # rule's win (skipping null/empty rows before a Generate over STORED
-    # array columns) doesn't apply here: every engine pre-filters
-    # size >= k explicitly. Cluster-shippable: the rule is an optimizer
+    # InferFiltersFromGenerate + CollapseProject copy the array under an
+    # explode of an ALIASED expression into an inferred
+    # `size(arr) > 0 AND isnotnull(arr)` Filter (r10 profiled find), so a
+    # shingle engine's tokenize → text_analysis.ngram_windows pipeline
+    # runs a second time per row. The rule's win (skipping null/empty rows
+    # before a Generate over STORED array columns) doesn't apply here:
+    # every engine pre-filters size >= k explicitly. Before the shared
+    # primitive, the copy re-ran the tokenizer once per window element
+    # (p93's doc-frequency agg: 13.9 s → 0.8 s at the sf1 lane with the
+    # rule excluded); ngram_windows keeps vanilla sessions, which run the
+    # rule, out of that trap. Cluster-shippable: the rule is an optimizer
     # heuristic, not a correctness feature.
     "spark.sql.optimizer.excludedRules": (
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"

@@ -160,3 +160,137 @@ def test_shingles_literal(cases):
     ]
     # the tab survives trim, so the first token is empty
     assert got[3] == [" Alpha beta", "Alpha beta gamma", "beta gamma delta"]
+
+
+# ---------------------------------------------------------------------------
+# text_analysis.ngram_windows: the one n-gram primitive
+# ---------------------------------------------------------------------------
+
+
+def _windows(spark, rows, schema, n):
+    df = spark.createDataFrame(rows, schema)
+    out = df.select("id", T.ngram_windows(F.col("a"), n).alias("w"))
+    return {
+        r["id"]: None if r["w"] is None else [tuple(x) for x in r["w"]]
+        for r in out.collect()
+    }
+
+
+def test_ngram_windows_edges(spark):
+    got = _windows(
+        spark,
+        [(1, []), (2, ["a"]), (3, ["a", "b"]), (4, None), (5, ["a", "b", "c"])],
+        "id int, a array<string>",
+        2,
+    )
+    assert got == {
+        1: [],
+        2: [],
+        3: [("a", "b")],
+        4: None,
+        5: [("a", "b"), ("b", "c")],
+    }
+
+
+def test_ngram_windows_any_element_type(spark):
+    got = _windows(
+        spark, [(1, [1, 2, 3, 4]), (2, [7, None, 9])], "id int, a array<bigint>", 3
+    )
+    assert got == {1: [(1, 2, 3), (2, 3, 4)], 2: [(7, None, 9)]}
+    assert _windows(spark, [(1, [5, 6])], "id int, a array<bigint>", 1) == {
+        1: [(5,), (6,)]
+    }
+    with pytest.raises(ValueError, match="n must be >= 1"):
+        T.ngram_windows(F.col("a"), 0)
+
+
+def test_word_ngrams_join_with_single_spaces(spark):
+    df = spark.createDataFrame(
+        [(1, ["", "a", "b"]), (2, ["x"]), (3, None)], "id int, a array<string>"
+    )
+    got = {
+        r["id"]: r["g"]
+        for r in df.select("id", T.word_ngrams(F.col("a"), 2).alias("g")).collect()
+    }
+    assert got == {1: [" a", "a b"], 2: [], 3: None}
+
+
+def test_ngram_windows_total_below_pushed_filter(spark, tmp_path):
+    """Catalyst pushes a predicate on the windows below the projection, so
+    the primitive is evaluated on rows of every length — including the
+    short and NULL rows a size filter further up would have dropped. It
+    must not fault there under ANSI."""
+    path = str(tmp_path / "arrs")
+    spark.createDataFrame(
+        [(1, ["a", "b", "c", "d"]), (2, ["x"]), (3, []), (4, None)],
+        "id int, a array<string>",
+    ).write.parquet(path)
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        df = (
+            spark.read.parquet(path)
+            .select("id", "a", T.ngram_windows(F.col("a"), 3).alias("w"))
+            .filter(F.size("w") >= 0)
+            .filter(F.size("a") >= 3)
+        )
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        [filt] = [ln for ln in plan.splitlines() if "Filter" in ln]
+        # the window predicate sits in the scan-side Filter, first
+        assert filt.index("arrays_zip") < filt.index(">= 3")
+        got = [(r["id"], [tuple(x) for x in r["w"]]) for r in df.collect()]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert got == [(1, [("a", "b", "c"), ("b", "c", "d")])]
+
+
+# ---------------------------------------------------------------------------
+# Guard: the retired n-gram builders stay retired
+# ---------------------------------------------------------------------------
+
+
+def _sources():
+    import pathlib
+
+    pkg = pathlib.Path(T.__file__).resolve().parents[1]
+    for sub in ("operators", "queries"):
+        for path in sorted((pkg / sub).glob("*.py")):
+            yield path, path.read_text()
+
+
+def _call_args(src: str, start: int) -> str:
+    """The argument text of the call whose '(' is at ``start``."""
+    depth = 0
+    for i in range(start, len(src)):
+        if src[i] == "(":
+            depth += 1
+        elif src[i] == ")":
+            depth -= 1
+            if depth == 0:
+                return src[start + 1 : i]
+    return src[start + 1 :]
+
+
+def test_no_second_ngram_builder():
+    import re
+
+    found = []
+    for path, src in _sources():
+        for name in ("hashed_word_shingles", "word_shingle_strings", "_word_ngrams"):
+            if name in src:
+                found.append((path.name, name))
+        if "F.sequence(F.lit(0), F.size(" in src:
+            found.append((path.name, "transform(sequence(0, size - k), element_at)"))
+        if re.search(r"lambda (\w+): F\.lower\(\1\)", src):
+            found.append((path.name, "per-token lower lambda"))
+        # a window zip over array slices lives only in ngram_windows
+        body = ""
+        if path.name == "text_analysis.py":
+            start = src.index("def ngram_windows(")
+            body = src[start : src.index("\ndef ", start + 1)]
+        for m in re.finditer(r"F\.(zip_with|arrays_zip)\(", src):
+            args = _call_args(src, m.end() - 1)
+            if "F.slice(" in args and args not in body:
+                line = src.count("\n", 0, m.start()) + 1
+                found.append((path.name, f"{m.group(1)} over slices at line {line}"))
+    assert found == [], found

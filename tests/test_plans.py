@@ -641,6 +641,33 @@ def test_no_inferred_filter_reevaluates_shingle_pipeline(spark, registry):
                 )
 
 
+def test_shingle_plans_have_no_positional_lambda_under_inferred_filters(
+    spark, registry
+):
+    """With InferFiltersFromGenerate ENABLED (a vanilla session's default,
+    which the external driver runs) the inferred Filter copies the
+    exploded shingle expression. The shared primitive builds windows from
+    array slices, so no plan of the shingle engines holds the per-position
+    ``transform(sequence(...), element_at(...))`` lambda that made such a
+    Filter re-run the tokenizer once per window element."""
+    key = "spark.sql.optimizer.excludedRules"
+    prev = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        for name in (
+            "p34_exact_jaccard_pairs",
+            "p46_doc_novelty",
+            "p87_shingle_containment",
+        ):
+            df = registry[name](spark, SF_DIR)
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert "element_at" not in plan, name
+            assert "sequence(" not in plan, name
+    finally:
+        if prev is not None:
+            spark.conf.set(key, prev)
+
+
 def test_p94_pii_scan_is_map_only_codegen(spark, registry):
     """The PII scrub is a pure regexp expression chain: ZERO exchanges of
     any kind and no Python evaluation node — a linear codegen scan."""

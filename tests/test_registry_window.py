@@ -25,12 +25,17 @@ def test_graded_window_is_exactly_the_r15_rotation():
     names = list(Q.all_queries())
     window = names[:50]
     expected = (
-        # the new r15 oracle-bearing ops (no driver history) lead, then
+        # the oracle-bearing queries rebuilt on the shared n-gram
+        # primitive lead, then the r15 window: the new r15 ops, then
         # strict least-recently-driver-graded order from the checked-in
         # CORRECTNESS records: p58-p61 (r10), the r11 cohort, then the
         # equal-recency r12 tier (judge-named q17+ cohort first) fills
         # the window to exactly 50.
-        ["q71_", "q72_", "p124_", "p125_", "p126_"]
+        [
+            "p34_", "p36_", "p40_", "p41_", "p46_", "p48_", "p50_", "p51_",
+            "p64_", "p87_", "p93_", "p95_", "p99_", "p100_", "p107_", "p114_",
+        ]
+        + ["q71_", "q72_", "p124_", "p125_", "p126_"]
         + ["p58_", "p59_", "p60_", "p61_"]
         + [
             "p13_", "p15_", "p16_", "p17_", "p18_", "p19_", "p21_",

@@ -268,6 +268,35 @@ def test_mine_triplets_null_anchor_id_dropped(spark):
     assert got == [(0, 1, 1, 0.6, 2, 0.8, -0.2)]
 
 
+def test_brute_force_duplicate_query_id_raises(spark):
+    corpus = spark.createDataFrame(
+        [(10, [1.0, 0.0]), (11, [0.0, 1.0]), (12, [0.6, 0.8])], VEC2
+    )
+    with pytest.raises(ValueError, match="brute_force_topk: duplicate queries id 0"):
+        _brute(spark, corpus, queries=((0, [1.0, 0.0]), (0, [1.0, 0.0])))
+
+
+def test_pq_topk_duplicate_query_id_raises(spark):
+    corpus = spark.createDataFrame(
+        [(10, [1.0, 0.0]), (11, [0.0, 1.0]), (12, [0.6, 0.8])], VEC2
+    )
+    queries = spark.createDataFrame([(0, [1.0, 0.0]), (0, [1.0, 0.0])], VEC2)
+    with pytest.raises(ValueError, match="pq_topk: duplicate queries id 0"):
+        S.pq_topk(corpus, queries, k=2, m=1, sub_dims=2, kc=2, n_iters=1)
+
+
+def test_mine_triplets_duplicate_anchor_id_raises(spark):
+    schema = "vec_id long, embedding array<double>, label int"
+    corpus = spark.createDataFrame(
+        [(0, [1.0, 0.0], 1), (1, [0.6, 0.8], 1), (2, [0.8, 0.6], 2)], schema
+    )
+    anchors = spark.createDataFrame(
+        [(0, [1.0, 0.0], 1), (0, [1.0, 0.0], 1)], schema
+    )
+    with pytest.raises(ValueError, match="mine_triplets: duplicate anchors id 0"):
+        S.mine_triplets(corpus, anchors)
+
+
 # ---------------------------------------------------------------------------
 # util/vectors.py: the Arrow list codec
 # ---------------------------------------------------------------------------
