@@ -644,8 +644,8 @@ def test_no_inferred_filter_reevaluates_shingle_pipeline(spark, registry):
 def test_shingle_plans_have_no_positional_lambda_under_inferred_filters(
     spark, registry
 ):
-    """With InferFiltersFromGenerate ENABLED (a vanilla session's default,
-    which the external driver runs) the inferred Filter copies the
+    """With InferFiltersFromGenerate ENABLED (the default of any session
+    built without this library's confs) the inferred Filter copies the
     exploded shingle expression. The shared primitive builds windows from
     array slices, so no plan of the shingle engines holds the per-position
     ``transform(sequence(...), element_at(...))`` lambda that made such a
