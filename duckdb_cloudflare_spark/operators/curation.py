@@ -15,6 +15,8 @@ reproducible from the seeds alone.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
@@ -91,7 +93,17 @@ def temperature_resample(
     )
 
 
-def curate(
+class CurationStages(NamedTuple):
+    """The frames one curation pass builds, in stage order: ``curate``
+    shards ``sampled``, and the p60 funnel counts every stage."""
+
+    gated: DataFrame
+    exact: DataFrame
+    canon: DataFrame
+    sampled: DataFrame
+
+
+def curation_stages(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -100,15 +112,10 @@ def curate(
     jaccard_threshold: float = 0.5,
     shingle_k: int = 3,
     resample_seed: str = "resample:",
-    epoch_seed: str = "epoch-7:",
-    n_shards: int = 8,
-) -> DataFrame:
-    """Full deterministic curation pass over ``docs`` (needs ``id_col``,
-    ``text_col``, ``stratum_col``, ``score_col`` columns). Returns
-    ``(id_col, stratum_col, shard, pos_in_shard)`` — the training-ready
-    corpus assignment, reproducible from the seeds alone. Feed the result
-    to ``sources.write.write_epoch_shards`` to materialize training order.
-    """
+) -> CurationStages:
+    """The quality gate → exact dedup → near-dup canonical → temperature
+    resample stages over ``docs``. The near-dup components' rounds run
+    when this is called (see ``dedup.connected_components``)."""
     gated = quality_gate(docs, text_col).select(
         id_col, stratum_col, score_col, text_col
     )
@@ -142,6 +149,32 @@ def curate(
     sampled = temperature_resample(
         canon, stratum_col=stratum_col, id_col=id_col, seed=resample_seed
     )
+    return CurationStages(gated, exact, canon, sampled)
+
+
+def curate(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    stratum_col: str = "lang",
+    score_col: str = "n_chars",
+    jaccard_threshold: float = 0.5,
+    shingle_k: int = 3,
+    resample_seed: str = "resample:",
+    epoch_seed: str = "epoch-7:",
+    n_shards: int = 8,
+) -> DataFrame:
+    """Full deterministic curation pass over ``docs`` (needs ``id_col``,
+    ``text_col``, ``stratum_col``, ``score_col`` columns). Returns
+    ``(id_col, stratum_col, shard, pos_in_shard)`` — the training-ready
+    corpus assignment, reproducible from the seeds alone. Feed the result
+    to ``sources.write.write_epoch_shards`` to materialize training order.
+    """
+    sampled = curation_stages(
+        docs, text_col=text_col, id_col=id_col, stratum_col=stratum_col,
+        score_col=score_col, jaccard_threshold=jaccard_threshold,
+        shingle_k=shingle_k, resample_seed=resample_seed,
+    ).sampled
     return D.epoch_shard_assign(
         sampled, seed=epoch_seed, n_shards=n_shards, id_col=id_col
     )

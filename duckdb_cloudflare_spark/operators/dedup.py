@@ -23,7 +23,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, DoubleType, LongType
@@ -308,197 +308,130 @@ def _lsh_verified_pairs(
     )
 
 
-def _warn_unconverged(fn: str, max_iterations: int) -> None:
-    """An unconverged label/star forest is WRONG (over-segmented components)
-    yet indistinguishable from a correct result by inspection — say so
-    loudly instead of returning it silently (ADVICE r2)."""
+def _warn_unconverged(max_iterations: int) -> None:
+    """An unconverged star forest is WRONG (over-segmented components) yet
+    indistinguishable from a correct result by inspection — say so loudly
+    instead of returning it silently (ADVICE r2)."""
     import warnings
 
     warnings.warn(
-        f"{fn}: iteration cap ({max_iterations}) exhausted before convergence; "
-        "the returned components are over-segmented (some connected nodes "
-        "carry different labels). Raise max_iterations — the star variant "
-        "needs O(log^2 n) rounds, min-label O(graph diameter).",
+        f"connected_components: iteration cap ({max_iterations}) exhausted "
+        "before convergence; the returned components are over-segmented "
+        "(some connected nodes carry different labels). Raise max_iterations "
+        "— large-star/small-star needs O(log^2 n) rounds.",
         RuntimeWarning,
         stacklevel=3,
     )
 
 
-def connected_components(
-    pairs: DataFrame, max_iterations: int = 20
-) -> DataFrame:
-    """Transitive closure of a pair list → (id, component) with component =
-    min id of the connected component.
-
-    Iterative min-label propagation: each round every node takes the min of
-    its own label and its neighbors' labels (one join + one aggregate per
-    round); converges in O(graph diameter) rounds — dedup graphs are
-    near-cliques with tiny diameters, so 2-4 rounds in practice. (For
-    adversarially long chains, the large-star/small-star variant of Kiveris
-    et al., SoCC'14, gets O(log²) rounds — same DataFrame skeleton, swap
-    the propagation rule.) Iterating DataFrames keeps everything in
-    Catalyst — no driver-side union-find, so it scales to billions of
-    edges. Each round is localCheckpoint()-ed to cut the exponentially
-    growing lineage, and the `changed` probe uses limit(1) so convergence
-    detection doesn't rescan the full label set.
-
-    Input: columns ``id_a``, ``id_b``. Output: ``id``, ``component``.
-    """
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
+def _sym(e: DataFrame) -> DataFrame:
+    return e.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
+        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
-    # labels: every node starts labeled with the min of itself and its
-    # direct neighborhood
-    labels = (
-        edges.groupBy("src")
-        .agg(F.min("dst").alias("m"))
+
+
+def _materialize(e: DataFrame) -> tuple[DataFrame, tuple]:
+    """Eager localCheckpoint of an ``(a, b)`` edge set with its fingerprint
+    — the count and bit_xor of the hashes of the edges with ``a != b``
+    (order-insensitive, and overflow-free under ANSI where a sum of int64
+    hashes overflows) — gathered by an Observation in the SAME job."""
+    obs = Observation()
+    real = F.col("a") != F.col("b")
+    e = e.observe(
+        obs,
+        F.count(F.when(real, 1)).alias("n"),
+        F.bit_xor(F.when(real, F.xxhash64("a", "b"))).alias("h"),
+    ).localCheckpoint(eager=True)
+    return e, tuple(obs.get.values())
+
+
+def connected_components(pairs: DataFrame, max_iterations: int = 30) -> DataFrame:
+    """Transitive closure of a pair list → ``(id, component)``, one row per
+    id that appears in a pair, ``component`` = min id of its connected
+    component.
+
+    Alternating large-star/small-star rounds (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14) over the canonical edge
+    set ``(least, greatest)``: O(log² n) rounds whatever the graph's
+    diameter, so chained near-dups (A≈B≈C≈… without A≈C — templated or
+    serially-edited documents) converge as fast as near-cliques. large-star:
+    every node's neighbors larger than it re-attach to the minimum of its
+    closed neighborhood; small-star: a node and its smaller neighbors
+    attach to the minimum of those neighbors. Each is one window over the
+    node, and a round ends in one ``distinct``: three shuffles, all in
+    Catalyst — no driver-side union-find, so the pair set (not the corpus)
+    is what iterates.
+
+    The rounds run HERE, when the function is called, not when the result
+    is collected: a converging loop has to see each round's output to
+    decide whether to run the next. The canonical edge set is materialized
+    once (one Spark action), and each round is exactly one action: an eager
+    localCheckpoint whose Observation carries the round's fingerprint,
+    compared with the previous round's. Only a fingerprint match pays the
+    exact two-sided exceptAll confirmation (one more action), so a hash
+    collision cannot end the loop early. An exhausted ``max_iterations``
+    warns (RuntimeWarning) and returns the over-segmented forest.
+
+    Input: columns ``id_a``, ``id_b``; a pair with a NULL endpoint is
+    dropped, as an equi-join on the id would drop it. Output: ``id``,
+    ``component``; an id paired only with itself is its own component.
+    """
+    canon, prev_fp = _materialize(
+        pairs.filter(F.col("id_a").isNotNull() & F.col("id_b").isNotNull())
         .select(
-            F.col("src").alias("id"), F.least(F.col("src"), F.col("m")).alias("component")
+            F.least("id_a", "id_b").alias("a"), F.greatest("id_a", "id_b").alias("b")
         )
+        .distinct()
     )
+    edges = canon.filter(F.col("a") != F.col("b"))
+    w = Window.partitionBy("u")
     converged = False
     for _ in range(max_iterations):
-        # propagate: node takes min(own label, labels of neighbors)
-        neigh = (
-            edges.join(labels.withColumnRenamed("id", "dst2"), edges.dst == F.col("dst2"))
-            .groupBy("src")
-            .agg(F.min("component").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neigh, labels.id == neigh.src, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nmin"), F.col("component"))
-                ).alias("component"),
-                # change flag computed INLINE (a neighbor label beat ours),
-                # so the convergence probe below is a filter over the
-                # checkpointed rows — no second shuffle join per round
-                # against the previous labels (measured ~25% per-round
-                # savings at toy scale, one fewer shuffle at any scale).
-                (
-                    F.coalesce(F.col("nmin"), F.col("component"))
-                    < F.col("component")
-                ).alias("chg"),
-            )
-        )
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = new_labels.filter(F.col("chg")).limit(1).count()
-        labels = new_labels.drop("chg")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        _warn_unconverged("connected_components", max_iterations)
-    return labels
-
-
-def _fp_aggs():
-    # built lazily: Column construction needs an active SparkContext, and
-    # this module is imported session-less (registry collection, pytest)
-    return (
-        F.count(F.lit(1)),
-        F.expr("bit_xor(xxhash64(a, b))"),
-    )
-
-
-def connected_components_star(pairs: DataFrame, max_iterations: int = 30) -> DataFrame:
-    """Connected components via alternating large-star/small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14): converges in O(log² n) rounds regardless of graph DIAMETER,
-    where ``connected_components``'s min-label propagation needs O(diameter)
-    rounds — use this variant when near-dup graphs can chain (A≈B≈C≈…
-    without A≈C), e.g. templated or serially-edited documents.
-
-    large-star: every node's neighbors larger than it re-attach to the
-    minimum of its closed neighborhood; small-star: the smaller neighbors
-    (and the node) attach to that minimum. Both are one groupBy + one join
-    per round — the same shuffle skeleton as the min-label variant, just an
-    O(log²) round bound instead of O(diameter).
-
-    Input: columns ``id_a``, ``id_b``. Output: ``id``, ``component`` (min id
-    of the component), one row per node that appears in any pair.
-    """
-    nodes = (
-        pairs.select(F.col("id_a").alias("id"))
-        .union(pairs.select(F.col("id_b").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    edges = (
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def _sym(e: DataFrame) -> DataFrame:
-        return e.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-            e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-
-    prev_fp = tuple(edges.agg(*_fp_aggs()).first())
-    converged = False
-    for _ in range(max_iterations):
-        # large-star: m(u) = min over {u} ∪ N(u); neighbors v > u attach to m
-        s = _sym(edges)
-        mins = s.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+        # large-star: each neighbor v > u attaches to m(u) = min of {u} ∪ N(u)
         large = (
-            s.join(mins, "u")
+            _sym(edges)
+            .withColumn("m", F.least(F.min("v").over(w), F.col("u")))
             .filter(F.col("v") > F.col("u"))
             .select(F.col("m").alias("a"), F.col("v").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
         )
-        # small-star: neighbors v < u (and u itself) attach to the min of
-        # {u} ∪ N⁻(u)
-        down = _sym(large).filter(F.col("v") < F.col("u"))
-        dmin = down.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            down.join(dmin, "u")
-            .select(F.col("m").alias("a"), F.col("v").alias("b"))
-            .union(dmin.select(F.col("m").alias("a"), F.col("u").alias("b")))
-            .filter(F.col("a") != F.col("b"))
-            .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-            .distinct()
+        # small-star: u and its neighbors v < u attach to m(u) = min of
+        # N⁻(u); both edges already have a <= b
+        down = (
+            _sym(large)
+            .filter(F.col("v") < F.col("u"))
+            .withColumn("m", F.min("v").over(w))
         )
-        small = small.localCheckpoint(eager=True)
-        # Convergence probe: a ONE-job aggregate fingerprint (count +
-        # bit_xor of edge hashes — order-insensitive and overflow-free
-        # under ANSI; sum of int64 hashes overflows) over the freshly
-        # materialized edges, compared to the CARRIED fingerprint of the
-        # previous round (no re-scan of the old edges). Only a fingerprint
-        # MATCH pays the exact two-sided exceptAll confirmation, so the
-        # expensive set comparison runs once at convergence, and a
-        # (cosmically unlikely) collision cannot terminate the loop early.
-        fp = tuple(small.agg(*_fp_aggs()).first())
-        if fp == prev_fp:
-            changed = (
-                small.exceptAll(edges).limit(1).count()
-                + edges.exceptAll(small).limit(1).count()
+        small, fp = _materialize(
+            down.select(
+                F.inline(
+                    F.array(
+                        F.struct(F.col("m").alias("a"), F.col("v").alias("b")),
+                        F.struct(F.col("m").alias("a"), F.col("u").alias("b")),
+                    )
+                )
             )
-            if changed == 0:
-                edges = small
-                converged = True
-                break
-        edges = small
-        prev_fp = fp
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
+        )
+        converged = (
+            fp == prev_fp
+            and small.exceptAll(edges).union(edges.exceptAll(small)).count() == 0
+        )
+        edges, prev_fp = small, fp
+        if converged:
+            break
     if not converged:
-        _warn_unconverged("connected_components_star", max_iterations)
+        _warn_unconverged(max_iterations)
 
-    # converged to a star forest: every node's component is the min of its
-    # closed neighborhood; isolated originals (self-pairs only) label self
-    lab = (
-        _sym(edges)
-        .groupBy("u")
-        .agg(F.least(F.min("v"), F.first("u")).alias("component"))
-        .select(F.col("u").alias("id"), "component")
-    )
+    # A star forest: every leaf b hangs off its component's min a. Off
+    # convergence, min over a node's smaller neighbors is what the closed
+    # neighborhood gives, so each node still gets exactly one row.
+    lab = edges.groupBy(F.col("b").alias("id")).agg(F.min("a").alias("component"))
     return (
-        nodes.join(lab, "id", "left")
+        canon.select(F.col("a").alias("id"))
+        .union(canon.select(F.col("b").alias("id")))
+        .distinct()
+        .join(lab, "id", "left")
         .select("id", F.coalesce("component", F.col("id")).alias("component"))
     )
 
@@ -508,7 +441,6 @@ def minhash_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     transitive: bool = False,
-    cc_variant: str = "minlabel",
     **kwargs,
 ) -> DataFrame:
     """Rows surviving near-dedup.
@@ -521,17 +453,10 @@ def minhash_dedup(
     ``transitive=True``: full connected-component clustering first, then
     keep the min-id member of every component — exact transitive semantics
     even when the pair list only has chain edges (A~B, B~C but not A~C).
-    ``cc_variant`` picks the clustering algorithm: ``"minlabel"``
-    (O(diameter) rounds — fastest on the near-clique graphs typical of
-    dedup) or ``"star"`` (large-star/small-star, O(log^2 n) rounds — use
-    when components can chain, e.g. templated or serially-edited docs).
     """
-    if cc_variant not in ("minlabel", "star"):
-        raise ValueError("cc_variant must be 'minlabel' or 'star'")
     pairs = minhash_lsh_pairs(df, text_col, id_col, **kwargs)
     if transitive:
-        cc = connected_components if cc_variant == "minlabel" else connected_components_star
-        comp = cc(pairs)
+        comp = connected_components(pairs)
         losers = comp.filter(F.col("id") != F.col("component")).select(
             F.col("id").alias(id_col)
         )
@@ -545,7 +470,6 @@ def dedup_keep_best(
     pairs: DataFrame,
     id_col: str = "doc_id",
     score_col: str = "n_chars",
-    cc_variant: str = "minlabel",
 ) -> DataFrame:
     """Quality-aware canonical selection: cluster the near-dup ``pairs``
     (connected components), then keep the HIGHEST-``score_col`` member of
@@ -561,8 +485,7 @@ def dedup_keep_best(
     gets WindowGroupLimit partial push-down — the corpus itself is never
     shuffled beyond the id join.
     """
-    cc = connected_components if cc_variant == "minlabel" else connected_components_star
-    comp = cc(pairs)  # (id, component) — only ids that appear in pairs
+    comp = connected_components(pairs)  # (id, component) — only ids that appear in pairs
     labeled = df.join(
         comp.select(F.col("id").alias(id_col), "component"), id_col, "left"
     )

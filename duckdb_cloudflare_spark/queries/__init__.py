@@ -243,7 +243,12 @@ def _scan(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 # driver-replica gate (tests/test_oracle_parity.py) and the sf0.1 scale
 # sweep (tests/test_scale_parity.py).
 _WINDOW_PRIORITY = [
-    # The oracle-bearing queries whose n-gram/shingle/bigram builders
+    # The oracle-bearing anchors of the one connected-components engine
+    # lead (p60 is windowed below; p20/p30 are rows-only), then the
+    # oracle-bearing entries left ungraded by the last two rotations ...
+    "p39_", "p54_",
+    "p05_", "p105_", "p111_", "p113_", "p115_", "p116_", "p119_",
+    # ... then the oracle-bearing queries whose n-gram/shingle/bigram builders
     # moved onto text_analysis.ngram_windows lead, so the graded prefix
     # covers the rewritten paths first (p73 and p31 were already windowed;
     # p06/p20/p30 are rows-only) ...

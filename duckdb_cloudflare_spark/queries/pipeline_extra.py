@@ -81,12 +81,13 @@ _PAIRS_CTES = r"""
     """,
     description="EXACT connected components over the deterministic exact-"
     "Jaccard pair set (p34's edges): every doc in a >=0.5 near-dup pair gets "
-    "its component's min doc_id. This hash-anchors the iterative min-label "
-    "CC operator (the engine under p20/p30, where LSH edges are "
-    "probabilistic and force rows-only checks) against a recursive-CTE "
-    "transitive closure in DuckDB. The Spark side is the O(diameter) "
-    "DataFrame label-propagation loop — no driver-side union-find; at "
-    "100 TB the pair set (not the corpus) is what iterates.",
+    "its component's min doc_id. This hash-anchors the one CC operator "
+    "(the engine under p20/p30/p54/p60; LSH edges are probabilistic and "
+    "force rows-only checks on p20/p30) against a recursive-CTE transitive "
+    "closure in DuckDB. The Spark side is the large-star/small-star "
+    "DataFrame loop (O(log^2 n) rounds, one Spark action each) — no "
+    "driver-side union-find; at 100 TB the pair set (not the corpus) is "
+    "what iterates.",
 )
 def p39_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = p34_exact_jaccard_pairs(spark, sf_dir).select("id_a", "id_b")
@@ -954,8 +955,9 @@ def p53_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(5) deterministic epoch shuffle (p43's shard/pos assignment). Every "
     "stage is the already-anchored operator, composed; the Spark side "
     "chains the operator library (connected_components iterates "
-    "DataFrames; everything else is windows/joins/filters). Scale notes "
-    "live with each stage's own operator.",
+    "large-star/small-star rounds over DataFrames, one Spark action each; "
+    "everything else is windows/joins/filters). Scale notes live with each "
+    "stage's own operator.",
 )
 def p54_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_cloudflare_spark.operators.curation import curate
@@ -1308,42 +1310,16 @@ def p59_contamination_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p60_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import broadcast
-    from pyspark.sql.window import Window
 
-    from duckdb_cloudflare_spark.operators.curation import (
-        quality_gate,
-        temperature_resample,
-    )
+    from duckdb_cloudflare_spark.operators.curation import curation_stages
 
     docs = load(spark, sf_dir, "documents")
-    gated = quality_gate(docs).select("doc_id", "lang", "n_chars", "text")
-    w_exact = Window.partitionBy(F.md5("text")).orderBy("doc_id")
-    exact = (
-        gated.withColumn("__rn", F.row_number().over(w_exact))
-        .filter(F.col("__rn") == 1)
-        .select("doc_id", "lang", "n_chars")
-    )
-    survivors_text = docs.join(exact.select("doc_id"), "doc_id", "left_semi")
-    pairs = D.exact_jaccard_pairs(survivors_text, k=3, threshold=0.5).select(
-        "id_a", "id_b"
-    )
-    comp = D.connected_components(pairs)
-    w_canon = Window.partitionBy("component").orderBy(
-        F.col("n_chars").desc(), F.col("doc_id")
-    )
-    canon = (
-        exact.join(comp.withColumnRenamed("id", "doc_id"), "doc_id", "left")
-        .withColumn("component", F.coalesce("component", "doc_id"))
-        .withColumn("__rn", F.row_number().over(w_canon))
-        .filter(F.col("__rn") == 1)
-        .select("doc_id", "lang")
-    )
-    sampled = temperature_resample(canon)
+    st = curation_stages(docs)
     counts = [
         df.agg(F.count(F.lit(1)).alias(name))
         for df, name in (
-            (docs, "n_input"), (gated, "n_gated"), (exact, "n_exact"),
-            (canon, "n_canonical"), (sampled, "n_sampled"),
+            (docs, "n_input"), (st.gated, "n_gated"), (st.exact, "n_exact"),
+            (st.canon, "n_canonical"), (st.sampled, "n_sampled"),
         )
     ]
     out = counts[0]

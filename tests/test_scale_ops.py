@@ -4,12 +4,20 @@ exact transitive dedup."""
 
 from __future__ import annotations
 
+import pathlib
+import random
+import warnings
+
 import pytest
 
 from pyspark.sql import functions as F
 
 from duckdb_cloudflare_spark.operators import scale as SC
-from duckdb_cloudflare_spark.operators.dedup import connected_components, minhash_dedup
+from duckdb_cloudflare_spark.operators.dedup import (
+    connected_components,
+    minhash_dedup,
+    minhash_lsh_pairs,
+)
 from duckdb_cloudflare_spark.plans import shuffle_count
 
 
@@ -86,6 +94,32 @@ def test_connected_components_chains(spark):
     }
 
 
+def _union_find(pairs) -> dict:
+    """Reference closure on the driver: ``{id: min id of its component}``
+    over every id in a pair whose endpoints are both non-NULL."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if a is None or b is None:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _components(df) -> dict:
+    return {r["id"]: r["component"] for r in df.collect()}
+
+
 def test_transitive_dedup_keeps_one_per_chain(spark):
     # A chain a~b, b~c where a~c is NOT a direct pair: single-pass dedup and
     # transitive dedup both keep only 'a' here (b and c are each a larger
@@ -99,76 +133,128 @@ def test_transitive_dedup_keeps_one_per_chain(spark):
         ],
         "doc_id long, text string",
     )
-    survivors = minhash_dedup(
-        docs, threshold=0.3, k_shingle=2, num_perm=16, num_bands=8, transitive=True
-    )
+    lsh = dict(threshold=0.3, k_shingle=2, num_perm=16, num_bands=8)
+    survivors = minhash_dedup(docs, transitive=True, **lsh)
     ids = {r["doc_id"] for r in survivors.collect()}
     assert 100 in ids
     assert 1 in ids
     assert len(ids) == 2
 
-    # the star clustering variant must agree with min-label on the same graph
-    star_ids = {
-        r["doc_id"]
-        for r in minhash_dedup(
-            docs, threshold=0.3, k_shingle=2, num_perm=16, num_bands=8,
-            transitive=True, cc_variant="star",
-        ).collect()
-    }
-    assert star_ids == ids
+    # exactly the docs that are their union-find component's min id, or in
+    # no pair at all
+    pairs = [(r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(docs, **lsh).collect()]
+    comp = _union_find(pairs)
+    assert ids == {d for d in (1, 2, 3, 100) if comp.get(d, d) == d}
+
+
+def _seeded_graph(seed: int, string_ids: bool = False):
+    """Near-cliques, shuffled-id chains up to diameter 64, self-pairs,
+    duplicate and reversed pairs — the shapes a near-dup pair list takes."""
+    rng = random.Random(seed)
+    nodes = rng.sample(range(100_000), 400)
+    pairs = []
+    for _ in range(6):  # near-cliques: most, not all, of the pairs
+        ids = [nodes.pop() for _ in range(rng.randint(3, 9))]
+        pairs += [(a, b) for a in ids for b in ids if a < b and rng.random() < 0.8]
+        pairs += [(a, b) for a, b in zip(ids, ids[1:])]  # keep it connected
+    for n in (2, 9, 33, 65):  # chains of diameter 1, 8, 32 and 64
+        ids = [nodes.pop() for _ in range(n)]
+        pairs += list(zip(ids, ids[1:]))
+    isolated = nodes.pop()
+    pairs += [(isolated, isolated)] + [(a, a) for a, _ in rng.sample(pairs, 5)]
+    pairs += rng.sample(pairs, 10)
+    pairs += [(b, a) for a, b in rng.sample(pairs, 20)]
+    rng.shuffle(pairs)
+    if string_ids:
+        name = {x: f"{rng.choice('abcdefgh')}{x:06d}" for p in pairs for x in p}
+        pairs = [(name[a], name[b]) for a, b in pairs]
+    return pairs
 
 
 class TestConnectedComponentsStar:
-    def test_long_chain_converges_in_log_rounds(self, spark):
-        from duckdb_cloudflare_spark.operators.dedup import connected_components_star
+    """``connected_components``, the one engine: large-star/small-star."""
 
-        # diameter-64 chain: min-label propagation needs ~64 rounds, the
-        # alternating star algorithm a handful
+    @pytest.mark.parametrize("seed", [1, 2, 3])
+    def test_matches_union_find_on_seeded_graphs(self, spark, seed):
+        pairs = _seeded_graph(seed)
+        df = spark.createDataFrame(pairs, "id_a long, id_b long")
+        assert _components(connected_components(df)) == _union_find(pairs)
+
+    def test_matches_union_find_on_string_ids(self, spark):
+        pairs = _seeded_graph(4, string_ids=True)
+        df = spark.createDataFrame(pairs, "id_a string, id_b string")
+        assert _components(connected_components(df)) == _union_find(pairs)
+
+    def test_long_chain_converges_in_log_rounds(self, spark):
+        # diameter-64 chain: the round count follows log² n, not the
+        # diameter (label propagation would need ~64 rounds)
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(64)], "id_a long, id_b long"
         )
-        comp = {
-            r["id"]: r["component"]
-            for r in connected_components_star(pairs, max_iterations=12).collect()
-        }
+        comp = _components(connected_components(pairs, max_iterations=12))
         assert set(comp) == set(range(65))
         assert set(comp.values()) == {0}
 
-    def test_matches_minlabel_on_clustered_graph(self, spark):
-        import random
-
-        from duckdb_cloudflare_spark.operators.dedup import (
-            connected_components,
-            connected_components_star,
+    def test_unconverged_cap_warns(self, spark):
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(16)], "id_a long, id_b long"
         )
-
-        rng = random.Random(7)
-        edges = []
-        # 12 clusters of 8 nodes with random internal spanning edges
-        for c in range(12):
-            ids = list(range(c * 100, c * 100 + 8))
-            rng.shuffle(ids)
-            for a, b in zip(ids, ids[1:]):
-                edges.append((a, b))
-            for _ in range(4):  # extra random intra-cluster edges
-                edges.append((rng.choice(ids), rng.choice(ids)))
-        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        want = {
-            r["id"]: r["component"] for r in connected_components(pairs).collect()
-        }
-        got = {
-            r["id"]: r["component"] for r in connected_components_star(pairs).collect()
-        }
-        assert got == want
+        with pytest.warns(RuntimeWarning, match="iteration cap"):
+            connected_components(pairs, max_iterations=1)
 
     def test_isolated_self_pair(self, spark):
-        from duckdb_cloudflare_spark.operators.dedup import connected_components_star
-
         pairs = spark.createDataFrame([(5, 5), (7, 9)], "id_a long, id_b long")
-        comp = {
-            r["id"]: r["component"] for r in connected_components_star(pairs).collect()
-        }
-        assert comp == {5: 5, 7: 7, 9: 7}
+        assert _components(connected_components(pairs)) == {5: 5, 7: 7, 9: 7}
+
+    def test_null_endpoint_pairs_are_dropped(self, spark):
+        # as an equi-join on the id would drop them: no NULL node, and no
+        # doc tied to one
+        pairs = spark.createDataFrame(
+            [(1, None), (None, None), (None, 4), (2, 3)], "id_a long, id_b long"
+        )
+        assert _components(connected_components(pairs)) == {2: 2, 3: 2}
+
+    def test_empty_input_returns_no_rows_and_no_warning(self, spark):
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            out = connected_components(
+                spark.createDataFrame([], "id_a long, id_b long")
+            )
+        assert out.collect() == []
+
+    @pytest.mark.parametrize(
+        "pairs, rounds",
+        [([(1, 2), (1, 3)], 1), ([(1, 2), (2, 3)], 2)],
+        ids=["star", "chain"],
+    )
+    def test_one_action_per_round(self, spark, pairs, rounds):
+        # Without AQE every action is one Spark job (AQE adds one per shuffle
+        # stage). The rounds run at the call: one job materializes the edge
+        # set, one per round checkpoints it with its fingerprint, and one
+        # confirms the fingerprint match. The parent's two engines paid 9
+        # (large-star/small-star) and 4 (min-label) jobs on the chain.
+        sc = spark.sparkContext
+        df = spark.createDataFrame(pairs, "id_a long, id_b long")
+        group = f"cc-actions-{rounds}"
+        prev = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        sc.setJobGroup(group, "connected_components")
+        try:
+            connected_components(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            spark.conf.set("spark.sql.adaptive.enabled", prev)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1 + rounds + 1
+
+    def test_one_engine_and_no_per_round_probe(self):
+        # one CC engine, no variant knob, and no second per-round action
+        pkg = pathlib.Path(connected_components.__code__.co_filename).parents[1]
+        for path in pkg.rglob("*.py"):
+            src = path.read_text()
+            assert "connected_components_star" not in src, path
+            assert "cc_variant" not in src, path
+            if path.parent.name == "operators":
+                assert ".limit(1).count()" not in src, path
 
 
 def test_partitioning_invariance_of_deterministic_stages(spark):
