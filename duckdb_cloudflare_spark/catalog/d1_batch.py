@@ -11,10 +11,10 @@ src/d1_http.cpp:525-547; semantics documented in reference README.md:199-255):
 
 from __future__ import annotations
 
-import math
 from typing import Any
 
 from duckdb_cloudflare_spark.sources.d1 import D1Client, quote_ident
+from duckdb_cloudflare_spark.sources.d1 import sql_literal as _sql_literal  # the one encoder
 
 
 class D1Batch:
@@ -54,25 +54,6 @@ class D1Batch:
         else:
             self.rollback()
         return False
-
-
-def _sql_literal(v: Any) -> str:
-    """Value → SQLite literal with the reference's escaping ('' for quotes,
-    src/d1_scan.cpp:76-89); bools as 1/0, bytes as X'hex', None as NULL."""
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "1" if v else "0"
-    if isinstance(v, float):
-        # repr(nan)/repr(inf) are invalid SQLite literals; one such value
-        # would fail the whole remote batch POST mid-write (earlier batches
-        # already committed, no rollback) — map to NULL instead.
-        return repr(v) if math.isfinite(v) else "NULL"
-    if isinstance(v, int):
-        return repr(v)
-    if isinstance(v, (bytes, bytearray)):
-        return "X'" + bytes(v).hex() + "'"
-    return "'" + str(v).replace("'", "''") + "'"
 
 
 # Cloudflare caps a D1 statement at ~100 KB of SQL (reference

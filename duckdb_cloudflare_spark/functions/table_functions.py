@@ -17,83 +17,26 @@ construction, and the hermetic test transports (``fixture_dir``,
 ``dry_run``) work unchanged.
 
 ``analyze`` runs in a session-less Python process, so the UDTF schemas are
-built programmatically here; ``tests/test_table_functions.py`` pins them
-equal to ``StructType.fromDDL`` of the DataSources' authoritative DDL
-strings (drift in either direction fails the suite).
+the readers' programmatic ``StructType``s (``sources/cdx.py``), the same
+objects the DataSources' ``schema()`` renders.
 """
 
 from __future__ import annotations
 
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    MapType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+import dataclasses as _dc
+from dataclasses import field as _field
 
+from pyspark.sql.functions import AnalyzeResult as _AnalyzeResult
+from pyspark.sql.types import StringType, StructField, StructType
 
-def _s(name: str, dt) -> StructField:
-    return StructField(name, dt)
-
-
-_STR_MAP = MapType(StringType(), StringType())
-
-# Programmatic twins of the readers' _BASE_SCHEMA DDL (pinned equal by test).
-CC_SCHEMA = StructType(
-    [
-        _s("url", StringType()),
-        _s("timestamp", TimestampType()),
-        _s("mimetype", StringType()),
-        _s("statuscode", IntegerType()),
-        _s("digest", StringType()),
-        _s("filename", StringType()),
-        _s("offset", LongType()),
-        _s("length", LongType()),
-        _s("crawl_id", StringType()),
-        _s(
-            "warc",
-            StructType([_s("version", StringType()), _s("headers", _STR_MAP)]),
-        ),
-        _s(
-            "response",
-            StructType(
-                [
-                    _s("body", BinaryType()),
-                    _s("headers", _STR_MAP),
-                    _s("http_version", StringType()),
-                    _s("error", StringType()),
-                ]
-            ),
-        ),
-    ]
-)
-
-WAYBACK_SCHEMA = StructType(
-    [
-        _s("url", StringType()),
-        _s("timestamp", TimestampType()),
-        _s("urlkey", StringType()),
-        _s("mimetype", StringType()),
-        _s("statuscode", IntegerType()),
-        _s("digest", StringType()),
-        _s("length", LongType()),
-        _s(
-            "response",
-            StructType([_s("body", BinaryType()), _s("error", StringType())]),
-        ),
-        _s("year", IntegerType()),
-        _s("month", IntegerType()),
-    ]
-)
+from duckdb_cloudflare_spark.sources.cdx import CdxReader, drain
+from duckdb_cloudflare_spark.sources.common_crawl import CommonCrawlReader
+from duckdb_cloudflare_spark.sources.wayback import WaybackReader
 
 
 def _options_from(kwargs: dict) -> dict:
     """Normalize UDTF argument values to the string options the readers
-    expect (booleans lowercased so ``_truthy`` sees 'true'). At analyze
+    expect (booleans lowercased so ``cdx.truthy`` sees 'true'). At analyze
     time the values are AnalyzeArguments: NON-CONSTANT arguments (e.g. a
     lateral column reference) are rejected loudly — silently treating them
     as absent would let analyze and eval disagree on the schema (the
@@ -119,12 +62,6 @@ def _options_from(kwargs: dict) -> dict:
 # column-order / debug-column hazards), and d1's remote schema discovery
 # runs once at bind, not again per execution. The subclass is MODULE-level
 # so it pickles by reference regardless of serializer.
-import dataclasses as _dc
-from dataclasses import field as _field
-
-from pyspark.sql.functions import AnalyzeResult as _AnalyzeResult
-
-
 @_dc.dataclass
 class CarryingAnalyzeResult(_AnalyzeResult):
     """AnalyzeResult + an opaque payload dict carried from analyze to eval."""
@@ -136,65 +73,50 @@ def _make_carrying_result(schema, **extra):
     return CarryingAnalyzeResult(schema=schema, payload=extra)
 
 
-def _with_debug(base: StructType, options: dict) -> StructType:
-    if str(options.get("debug", "")).lower() in ("true", "1", "yes"):
-        return StructType(base.fields + [_s("cdx_url", StringType())])
-    return base
+class _CdxScanUDTF:
+    """A CDX table function: same named parameters, defaults, bind-time
+    unknown-option errors and row contract as its DataSource (they share
+    the reader). Each subclass names its reader and SQL name and declares
+    the static ``analyze`` PySpark requires."""
 
-
-class CommonCrawlIndexUDTF:
-    """``common_crawl_index(url => ..., crawl_id => ..., ...)`` — same named
-    parameters, defaults, bind-time unknown-option errors, and row contract
-    as the ``common_crawl`` DataSource (they share the reader)."""
+    reader_cls: type[CdxReader]
+    sql_name: str
 
     def __init__(self, analyze_result=None):
         self._ar = analyze_result
 
-    @staticmethod
-    def analyze(**kwargs):
-        from duckdb_cloudflare_spark.sources.options import (
-            CC_OPTIONS,
-            validate_options,
-        )
-
+    @classmethod
+    def _analyze(cls, kwargs: dict):
         opts = _options_from(kwargs)
-        validate_options("common_crawl_index", opts, CC_OPTIONS)
-        return _make_carrying_result(_with_debug(CC_SCHEMA, opts), options=opts)
+        schema = cls.reader_cls.scan_schema(opts, source=cls.sql_name)
+        return _make_carrying_result(schema, options=opts)
 
     def eval(self, **kwargs):
-        from duckdb_cloudflare_spark.sources.common_crawl import CommonCrawlReader
-
         opts = self._ar.payload["options"] if self._ar else _options_from(kwargs)
-        reader = CommonCrawlReader(_with_debug(CC_SCHEMA, opts), opts)
-        for part in reader.partitions():
-            yield from reader.read(part)
+        yield from drain(self.reader_cls(self.reader_cls.scan_schema(opts), opts))
 
 
-class WaybackMachineUDTF:
+class CommonCrawlIndexUDTF(_CdxScanUDTF):
+    """``common_crawl_index(url => ..., crawl_id => ..., ...)``."""
+
+    reader_cls = CommonCrawlReader
+    sql_name = "common_crawl_index"
+
+    @staticmethod
+    def analyze(**kwargs):
+        return CommonCrawlIndexUDTF._analyze(kwargs)
+
+
+class WaybackMachineUDTF(_CdxScanUDTF):
     """``wayback_machine(url => ..., collapse => ..., ...)`` — the reference's
-    Internet Archive table function as a UDTF over the shared reader."""
+    Internet Archive table function."""
 
-    def __init__(self, analyze_result=None):
-        self._ar = analyze_result
+    reader_cls = WaybackReader
+    sql_name = "wayback_machine"
 
     @staticmethod
     def analyze(**kwargs):
-        from duckdb_cloudflare_spark.sources.options import (
-            WAYBACK_OPTIONS,
-            validate_options,
-        )
-
-        opts = _options_from(kwargs)
-        validate_options("wayback_machine", opts, WAYBACK_OPTIONS)
-        return _make_carrying_result(_with_debug(WAYBACK_SCHEMA, opts), options=opts)
-
-    def eval(self, **kwargs):
-        from duckdb_cloudflare_spark.sources.wayback import WaybackReader
-
-        opts = self._ar.payload["options"] if self._ar else _options_from(kwargs)
-        reader = WaybackReader(_with_debug(WAYBACK_SCHEMA, opts), opts)
-        for part in reader.partitions():
-            yield from reader.read(part)
+        return WaybackMachineUDTF._analyze(kwargs)
 
 
 class D1ScanUDTF:
@@ -234,9 +156,7 @@ class D1ScanUDTF:
         else:
             opts = _options_from(kwargs)
             schema = _client_from_options(opts).table_schema(opts["table"])
-        reader = D1Reader(schema, opts)
-        for part in reader.partitions():
-            yield from reader.read(part)
+        yield from drain(D1Reader(schema, opts))
 
 
 class D1QueryUDTF:
@@ -268,7 +188,7 @@ class D1QueryUDTF:
         rows = _client_from_options(opts).query(sql)
         cols = list(rows[0].keys()) if rows else ["result"]
         return _make_carrying_result(
-            StructType([_s(c, StringType()) for c in cols]),
+            StructType([StructField(c, StringType()) for c in cols]),
             options=opts, sql=sql, cols=cols,
         )
 

@@ -110,12 +110,30 @@ def distinct_on_to_collapse(*exprs: str) -> str | None:
     return ";;".join(result) if result else None
 
 
+def _scan(spark: SparkSession, source: str, url: str, limit: int | None,
+          regex_filter: str | None, options: dict) -> DataFrame:
+    """One reader call: ``limit`` is the CDX fetch cap (``max_results``) and
+    the Spark-side ``.limit``; ``regex_filter`` is appended to the ';;'-joined
+    ``filter`` option; other options pass through as strings (booleans
+    lowercased, None and False left unset)."""
+    register_sources(spark)
+    if regex_filter:
+        options["filter"] = ";;".join(filter(None, [options.get("filter"), regex_filter]))
+    if limit is not None:
+        options.setdefault("max_results", int(limit))
+    r = spark.read.format(source).option("url", url)
+    for k, v in options.items():
+        if v is not None and v is not False:
+            r = r.option(k, "true" if v is True else str(v))
+    df = r.load()
+    return df if limit is None else df.limit(int(limit))
+
+
 def read_common_crawl(
     spark: SparkSession,
     url: str,
     *,
     limit: int | None = None,
-    offset: int | None = None,
     crawl_id: str | None = None,
     fetch_response: bool = False,
     url_regex: str | None = None,
@@ -131,30 +149,12 @@ def read_common_crawl(
     ``pushFilters``, so the named parameter is the only route. Extra
     ``options`` pass through to the reader (filter, from, to, debug,
     dry_run, timeout, ...)."""
-    register_sources(spark)
-    r = spark.read.format("common_crawl").option("url", url)
+    rx = None
     if url_regex:
-        rx = url_regex
-        if not rx.startswith("^"):
-            rx = "^" + rx
-        if not rx.endswith("$"):
-            rx = rx + "$"
-        existing = options.pop("filter", "")
-        options["filter"] = (existing + ";;" if existing else "") + f"~url:{rx}"
-    if crawl_id:
-        r = r.option("crawl_id", crawl_id)
-    if limit is not None:
-        r = r.option("max_results", str(int(limit)))
-    if offset is not None:
-        r = r.option("offset", str(int(offset)))
-    if fetch_response:
-        r = r.option("fetch_response", "true")
-    for k, v in options.items():
-        r = r.option(k, str(v))
-    df = r.load()
-    if limit is not None:
-        df = df.limit(int(limit))
-    return df
+        rx = "~url:" + ("" if url_regex.startswith("^") else "^") + url_regex
+        rx += "" if url_regex.endswith("$") else "$"
+    return _scan(spark, "common_crawl", url, limit, rx,
+                 dict(options, crawl_id=crawl_id, fetch_response=fetch_response))
 
 
 def read_wayback(
@@ -181,7 +181,6 @@ def read_wayback(
     ``urlkey_regex`` adds the reference's SIMILAR-TO pushdown as a
     ``urlkey:regex`` server filter (src/internet_archive.cpp:987-1005 —
     regexes never reach Spark's ``pushFilters``)."""
-    register_sources(spark)
     if distinct_on:
         mapped = distinct_on_to_collapse(*distinct_on)
         if mapped is None:
@@ -190,25 +189,9 @@ def read_wayback(
                 "use dropDuplicates/window-rank dedup Spark-side instead"
             )
         collapse = f"{collapse};;{mapped}" if collapse else mapped
-    r = spark.read.format("wayback_machine").option("url", url)
-    if urlkey_regex:
-        existing = options.pop("filter", "")
-        options["filter"] = (
-            (existing + ";;" if existing else "") + f"urlkey:{urlkey_regex}"
-        )
-    if limit is not None:
-        r = r.option("max_results", str(int(limit)))
-    if offset is not None:
-        r = r.option("offset", str(int(offset)))
-    if collapse:
-        r = r.option("collapse", collapse)
-    if fast_latest:
-        r = r.option("fast_latest", "true")
-    if fetch_response:
-        r = r.option("fetch_response", "true")
-    for k, v in options.items():
-        r = r.option(k, str(v))
-    df = r.load()
-    if limit is not None:
-        df = df.limit(int(limit))
-    return df
+    return _scan(
+        spark, "wayback_machine", url, limit,
+        urlkey_regex and f"urlkey:{urlkey_regex}",
+        dict(options, offset=offset, collapse=collapse or None,
+             fast_latest=fast_latest, fetch_response=fetch_response),
+    )

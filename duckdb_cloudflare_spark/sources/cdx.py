@@ -13,12 +13,37 @@ URL-building parity (citations into /root/reference):
 Parsing parity:
 - CC ND-JSON rows             ← src/common_crawl_index.cpp:152-191
 - Wayback space-delimited CSV ← src/internet_archive.cpp:210-256
+
+The scan core both DataSources share is at the end of the module: output
+schemas, option flags, the dry-run/CDX-fetch/parse/project ``read()``
+skeleton (``CdxReader``), the in-order fetch window and the drain.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import sys
+import time
+from collections import deque
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
+from itertools import islice
+from typing import Callable, Iterable, Iterator
 
+from pyspark.sql.datasource import DataSource, DataSourceReader, Filter
+from pyspark.sql.types import (
+    BinaryType,
+    IntegerType,
+    LongType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
+
+from duckdb_cloudflare_spark.sources.options import validate_options
+from duckdb_cloudflare_spark.sources.pushdown import CdxQuerySpec
+from duckdb_cloudflare_spark.util.http import DEFAULT_TIMEOUT_SECONDS
 from duckdb_cloudflare_spark.util.text import extract_json_value, sanitize_utf8
 
 CC_INDEX_BASE = "https://index.commoncrawl.org"
@@ -200,3 +225,178 @@ def parse_wayback_csv(
                 rec.length = 0 if val in ("", "-") else int(val) if val.lstrip("-").isdigit() else 0
         records.append(rec)
     return records
+
+
+# ---------------------------------------------------------------------------
+# Scan core shared by the common_crawl and wayback_machine DataSources
+# ---------------------------------------------------------------------------
+
+DEFAULT_MAX_RESULTS = 100  # src/common_crawl_index.cpp:38-43
+FETCH_CONCURRENCY = 8  # bounded per-partition fan-out (respect the archive)
+
+
+def _struct(**fields) -> StructType:
+    return StructType([StructField(name, dt) for name, dt in fields.items()])
+
+
+_STR, _STR_MAP = StringType(), MapType(StringType(), StringType())
+
+# Output schemas: CommonCrawlBind (src/common_crawl_index.cpp:344-397) and the
+# wayback bind with its computed year/month (src/internet_archive.cpp:434-440).
+# Built programmatically because UDTF ``analyze`` runs without a session;
+# ``DataSource.schema()`` returns their ``simpleString()``.
+CC_SCHEMA = _struct(
+    url=_STR, timestamp=TimestampType(), mimetype=_STR, statuscode=IntegerType(),
+    digest=_STR, filename=_STR, offset=LongType(), length=LongType(), crawl_id=_STR,
+    warc=_struct(version=_STR, headers=_STR_MAP),
+    response=_struct(body=BinaryType(), headers=_STR_MAP, http_version=_STR, error=_STR),
+)
+WAYBACK_SCHEMA = _struct(
+    url=_STR, timestamp=TimestampType(), urlkey=_STR, mimetype=_STR,
+    statuscode=IntegerType(), digest=_STR, length=LongType(),
+    response=_struct(body=BinaryType(), error=_STR),
+    year=IntegerType(), month=IntegerType(),
+)
+
+
+def truthy(v) -> bool:
+    return str(v).lower() in ("true", "1", "yes")
+
+
+def with_debug(schema: StructType, options) -> StructType:
+    """``schema`` plus the ``cdx_url`` column when the ``debug`` option is set."""
+    if truthy(options.get("debug")):
+        return StructType(schema.fields + [StructField("cdx_url", _STR)])
+    return schema
+
+
+def fetch_in_order(records: Iterable, fetch: Callable) -> Iterator[tuple]:
+    """``(record, fetch(record))`` for every record, in input order, each as
+    soon as its own fetch resolves (SURVEY §4.2: stream rows per partition,
+    don't materialize). FETCH_CONCURRENCY threads keep at most
+    2×FETCH_CONCURRENCY fetches in flight, so the first row reaches Spark
+    while later fetches are in the air and memory holds a window of
+    responses, not the partition. Closing the generator early cancels the
+    fetches not yet started."""
+    it = iter(records)
+    pool = ThreadPoolExecutor(max_workers=FETCH_CONCURRENCY)
+    try:
+        pending = deque(
+            (rec, pool.submit(fetch, rec)) for rec in islice(it, 2 * FETCH_CONCURRENCY)
+        )
+        while pending:
+            rec, fut = pending.popleft()
+            resp = fut.result()
+            for nxt in islice(it, 1):  # top up before yielding: keep the pool busy
+                pending.append((nxt, pool.submit(fetch, nxt)))
+            yield rec, resp
+    finally:
+        pool.shutdown(cancel_futures=True)
+
+
+def drain(reader: DataSourceReader) -> Iterator[tuple]:
+    """Every row of every planned partition, in order: a whole scan in one
+    task (the table functions and the Wayback stream read this way)."""
+    for partition in reader.partitions():
+        yield from reader.read(partition)
+
+
+class CdxReader(DataSourceReader):
+    """One CDX scan: options → query spec and flags, filter pushdown, and a
+    ``read()`` that emits the dry-run row or fetches the CDX page with
+    retry, parses it, optionally fetches each record's content through
+    ``fetch_in_order`` and projects rows by field name.
+
+    A subclass names its ``source``, ``allowed_options``, ``base_schema``,
+    ``api`` (for errors) and ``translate`` (its pushdown catalogue), plans
+    ``partitions()``, and supplies ``cdx_url(partition)``,
+    ``parse(body, partition)``, ``fetch(transport, record, start)`` and
+    ``row(record, response)``.
+
+    ``make_transport`` and ``fetch_with_retry`` are looked up in the
+    subclass's module when a partition is read, so a patched global of that
+    module (tests, perfbench's traced drive) intercepts the CDX request too.
+    """
+
+    source: str
+    allowed_options: set[str]
+    base_schema: StructType
+    api: str
+    translate: Callable[[Filter, CdxQuerySpec], str | None]
+
+    def __init__(self, schema: StructType, options: dict):
+        self.schema_ = schema
+        self.options = options
+        self.spec = CdxQuerySpec(
+            url_pattern=options.get("url", ""),
+            match_type=options.get("match_type", "exact"),
+            crawl_ids=[c for c in options.get("crawl_id", "").split(",") if c],
+            cdx_filters=[f for f in options.get("filter", "").split(";;") if f],
+            from_ts=options.get("from", ""),
+            to_ts=options.get("to", ""),
+        )
+        self.dry_run = truthy(options.get("dry_run"))
+        self.fetch_response = truthy(options.get("fetch_response"))
+        self.max_results = int(options.get("max_results", DEFAULT_MAX_RESULTS))
+        self.timeout_seconds = int(options.get("timeout", DEFAULT_TIMEOUT_SECONDS))
+
+    @classmethod
+    def scan_schema(cls, options, source: str | None = None) -> StructType:
+        """The output schema for ``options``; unknown options are a
+        bind-time error, as in the reference
+        (test/sql/common_crawl_errors.test:7-31)."""
+        validate_options(source or cls.source, dict(options), cls.allowed_options)
+        return with_debug(cls.base_schema, options)
+
+    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
+        for f in filters:
+            # Absorbed filters leave the plan (reference
+            # src/common_crawl_index.cpp:1456-1459); weaker or
+            # untranslated ones stay residual (pushdown.py).
+            if self.translate(f, self.spec) != "absorbed":
+                yield f
+
+    def require_url(self) -> None:
+        if not self.spec.url_pattern:
+            raise ValueError(
+                f"{self.source} requires a URL filter. Use .option('url', ...) "
+                "or WHERE url = / startswith / endswith / contains"
+            )
+
+    def read(self, partition) -> Iterator[tuple]:
+        fields = self.schema_.fieldNames()
+        cdx_url = self.cdx_url(partition)
+        if self.dry_run:
+            yield tuple(cdx_url if name == "cdx_url" else None for name in fields)
+            return
+
+        io = sys.modules[type(self).__module__]
+        transport = io.make_transport(self.options)
+        start = time.monotonic()
+        result = io.fetch_with_retry(
+            transport, cdx_url, start_time=start, timeout_seconds=self.timeout_seconds
+        )
+        if result.error:
+            raise IOError(f"Error querying {self.api}: {result.error}")
+        records = self.parse(result.body, partition)
+        if self.fetch_response:
+            fetched = fetch_in_order(records, lambda rec: self.fetch(transport, rec, start))
+        else:
+            fetched = ((rec, None) for rec in records)
+        for rec, response in fetched:
+            row = self.row(rec, response)
+            row["cdx_url"] = cdx_url
+            yield tuple(row.get(name) for name in fields)
+
+
+class CdxDataSource(DataSource):
+    """A CDX DataSource is its reader class: schema and reader both come
+    from ``reader_cls``."""
+
+    reader_cls: type[CdxReader]
+
+    def schema(self) -> str:
+        return self.reader_cls.scan_schema(self.options).simpleString()
+
+    def reader(self, schema: StructType) -> CdxReader:
+        return self.reader_cls(schema, dict(self.options))

@@ -16,6 +16,9 @@ function (/root/reference src/common_crawl_index.cpp: bind :311-414, init
 - ``debug`` option adds the cdx_url column; with ``dry_run`` the reader skips
   the network entirely and emits one row carrying the URL it would request —
   the reference's golden-URL test backbone (SURVEY §5)
+- the schema, options, pushdown loop, dry-run/CDX-fetch ``read()`` and the
+  in-order fetch window are the scan core in ``cdx.py``, shared with
+  ``wayback_machine``; this module holds what is Common Crawl's own
 
 Usage:
     spark.read.format("common_crawl")
@@ -28,71 +31,31 @@ Usage:
 
 from __future__ import annotations
 
-import time
-from concurrent.futures import ThreadPoolExecutor
-from typing import Iterator
-
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    Filter,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import InputPartition, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
 from duckdb_cloudflare_spark.sources.cdx import (
+    CC_SCHEMA,
+    FETCH_CONCURRENCY,  # noqa: F401  (the fetch window's width, imported from here)
     CDXRecord,
+    CdxDataSource,
+    CdxReader,
     build_cc_cdx_url,
     build_warc_url,
     parse_cc_ndjson,
+    truthy,
 )
-from duckdb_cloudflare_spark.sources.pushdown import CdxQuerySpec, translate_cc_filter
+from duckdb_cloudflare_spark.sources.options import CC_OPTIONS
+from duckdb_cloudflare_spark.sources.pushdown import translate_cc_filter
 from duckdb_cloudflare_spark.util.http import fetch_with_retry, make_transport
 from duckdb_cloudflare_spark.util.text import parse_cdx_timestamp
-from duckdb_cloudflare_spark.util.warc import decompress_gzip, parse_warc_response
-
-# Output schema — parity with CommonCrawlBind (src/common_crawl_index.cpp:344-397).
-_BASE_SCHEMA = (
-    "url string, timestamp timestamp, mimetype string, statuscode int, "
-    "digest string, filename string, offset bigint, length bigint, crawl_id string, "
-    "warc struct<version: string, headers: map<string,string>>, "
-    "response struct<body: binary, headers: map<string,string>, http_version: string, error: string>"
+from duckdb_cloudflare_spark.util.warc import (
+    WARCResponse,
+    decompress_gzip,
+    parse_warc_response,
 )
 
-DEFAULT_MAX_RESULTS = 100  # src/common_crawl_index.cpp:38-43
-DEFAULT_TIMEOUT_SECONDS = 180
-FETCH_CONCURRENCY = 8  # bounded per-partition fan-out (respect the archive)
-
-
-def _truthy(v: str | None) -> bool:
-    return str(v).lower() in ("true", "1", "yes")
-
-
-class CommonCrawlDataSource(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return "common_crawl"
-
-    def schema(self) -> str:
-        from duckdb_cloudflare_spark.sources.options import CC_OPTIONS, validate_options
-
-        # bind-time error for unknown named parameters, matching the
-        # reference (test/sql/common_crawl_errors.test:7-31)
-        validate_options("common_crawl", dict(self.options), CC_OPTIONS)
-        if _truthy(self.options.get("debug")):
-            return _BASE_SCHEMA + ", cdx_url string"
-        return _BASE_SCHEMA
-
-    def reader(self, schema: StructType) -> "CommonCrawlReader":
-        return CommonCrawlReader(schema, dict(self.options))
-
-    def simpleStreamReader(self, schema: StructType) -> "CommonCrawlStreamReader":
-        """Streaming surface: each NEW crawl appearing in collinfo.json is
-        one micro-batch (the reference is batch-only; this is the natural
-        incremental extension — crawl ids are already the partition axis,
-        so the stream offset is simply the set of crawls processed)."""
-        return CommonCrawlStreamReader(schema, dict(self.options))
+_CDX_FIELDS = ["url", "timestamp", "mimetype", "statuscode", "digest", "filename", "offset", "length"]
 
 
 class CrawlPartition(InputPartition):
@@ -101,33 +64,14 @@ class CrawlPartition(InputPartition):
         self.max_results = max_results
 
 
-class CommonCrawlReader(DataSourceReader):
-    def __init__(self, schema: StructType, options: dict):
-        self.schema_ = schema
-        self.options = options
-        self.spec = CdxQuerySpec(
-            url_pattern=options.get("url", ""),
-            crawl_ids=[c for c in options.get("crawl_id", "").split(",") if c],
-            cdx_filters=[f for f in options.get("filter", "").split(";;") if f],
-            from_ts=options.get("from", ""),
-            to_ts=options.get("to", ""),
-        )
-        self.debug = _truthy(options.get("debug"))
-        self.dry_run = _truthy(options.get("dry_run"))
-        self.fetch_response = _truthy(options.get("fetch_response"))
-        self.max_results = int(options.get("max_results", DEFAULT_MAX_RESULTS))
-        self.timeout_seconds = int(options.get("timeout", DEFAULT_TIMEOUT_SECONDS))
+class CommonCrawlReader(CdxReader):
+    source = "common_crawl"
+    allowed_options = CC_OPTIONS
+    base_schema = CC_SCHEMA
+    api = "CDX API"
+    translate = staticmethod(translate_cc_filter)
 
     # -- planning ----------------------------------------------------------
-    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        for f in filters:
-            outcome = translate_cc_filter(f, self.spec)
-            # Absorbed filters are removed from the plan (reference
-            # :1456-1459); weaker translations stay residual (see
-            # pushdown.py module docstring).
-            if outcome != "absorbed":
-                yield f
-
     def _resolve_crawl_ids(self) -> list[str]:
         if self.spec.crawl_ids:
             return self.spec.crawl_ids
@@ -144,11 +88,7 @@ class CommonCrawlReader(DataSourceReader):
         return [catalog.latest_crawl_id()]
 
     def partitions(self) -> list[InputPartition]:
-        if not self.spec.url_pattern:
-            raise ValueError(
-                "common_crawl requires a URL filter. Use .option('url', '*.example.com/*') "
-                "or WHERE url = / startswith / endswith / contains"
-            )
+        self.require_url()
         crawl_ids = self._resolve_crawl_ids()
         # The reference divides a pushed LIMIT across parallel crawls with
         # CEILING division — (limit + n_crawls - 1) / n_crawls
@@ -160,79 +100,31 @@ class CommonCrawlReader(DataSourceReader):
         return [CrawlPartition(cid, per_crawl) for cid in crawl_ids]
 
     # -- execution ---------------------------------------------------------
-    def read(self, partition: CrawlPartition):
-        fields = [f.name for f in self.schema_.fields]
-        cdx_url = build_cc_cdx_url(
+    def cdx_url(self, partition: CrawlPartition) -> str:
+        return build_cc_cdx_url(
             partition.crawl_id,
             self.spec.url_pattern,
-            ["url", "timestamp", "mimetype", "statuscode", "digest", "filename", "offset", "length"],
+            _CDX_FIELDS,
             cdx_filters=self.spec.cdx_filters,
             max_results=partition.max_results,
             from_ts=self.spec.from_ts,
             to_ts=self.spec.to_ts,
         )
-        if self.dry_run:
-            row = {name: None for name in fields}
-            if "cdx_url" in fields:
-                row["cdx_url"] = cdx_url
-            yield tuple(row[name] for name in fields)
-            return
 
-        transport = make_transport(self.options)
-        start = time.monotonic()
-        result = fetch_with_retry(
-            transport, cdx_url, start_time=start, timeout_seconds=self.timeout_seconds
-        )
-        if result.error:
-            raise IOError(f"Error querying CDX API: {result.error}")
-        records = parse_cc_ndjson(result.body, partition.crawl_id, need_warc_fields=True)
+    def parse(self, body: bytes, partition: CrawlPartition) -> list[CDXRecord]:
+        return parse_cc_ndjson(body, partition.crawl_id, need_warc_fields=True)
 
-        if not (self.fetch_response and records):
-            for rec in records:
-                yield self._to_row(rec, None, cdx_url, fields)
-            return
-
-        # Streaming emission with a bounded prefetch window (SURVEY §4.2:
-        # stream rows per partition, don't materialize): keep at most
-        # 2×FETCH_CONCURRENCY fetches in flight, yield each row in CDX order
-        # as soon as ITS fetch resolves — the first row reaches Spark while
-        # later fetches are still in the air, and memory holds a window of
-        # responses instead of the whole partition.
-        from collections import deque
-
-        prefetch = FETCH_CONCURRENCY * 2
-        with ThreadPoolExecutor(max_workers=FETCH_CONCURRENCY) as pool:
-            pending: deque = deque()
-            it = iter(records)
-            for rec in records[:prefetch]:
-                next(it)
-                pending.append(
-                    (rec, pool.submit(self._fetch_warc, transport, rec, start,
-                                      self.timeout_seconds))
-                )
-            while pending:
-                rec, fut = pending.popleft()
-                resp = fut.result()
-                nxt = next(it, None)
-                if nxt is not None:  # top up before yielding: keep pool busy
-                    pending.append(
-                        (nxt, pool.submit(self._fetch_warc, transport, nxt, start,
-                                          self.timeout_seconds))
-                    )
-                yield self._to_row(rec, resp, cdx_url, fields)
-
-    @staticmethod
-    def _fetch_warc(transport, rec: CDXRecord, start: float, timeout_seconds: int):
+    def fetch(self, transport, rec: CDXRecord, start: float) -> WARCResponse:
         """Range request + gunzip + WARC parse; errors → response.error
         (src/common_crawl_index.cpp:208-304)."""
-        from duckdb_cloudflare_spark.util.warc import WARCResponse
-
         if not rec.filename or rec.offset == 0 or rec.length == 0:
             return WARCResponse()  # invalid record → empty (reference :212-214)
-        url = build_warc_url(rec.filename)
-        headers = {"Range": f"bytes={rec.offset}-{rec.offset + rec.length - 1}"}
         result = fetch_with_retry(
-            transport, url, headers=headers, start_time=start, timeout_seconds=timeout_seconds
+            transport,
+            build_warc_url(rec.filename),
+            headers={"Range": f"bytes={rec.offset}-{rec.offset + rec.length - 1}"},
+            start_time=start,
+            timeout_seconds=self.timeout_seconds,
         )
         if result.error:
             return WARCResponse(error=result.error)
@@ -241,23 +133,8 @@ class CommonCrawlReader(DataSourceReader):
             return WARCResponse(error=decompressed.decode("utf-8", errors="replace"))
         return parse_warc_response(decompressed)
 
-    def read_crawl(self, crawl_id: str):
-        """All rows of one crawl (streaming entry point reuses the batch
-        partition logic 1:1 — same URL building, fetching, parsing)."""
-        return self.read(CrawlPartition(crawl_id, self.max_results))
-
-    def _to_row(self, rec: CDXRecord, warc, cdx_url: str, fields: list[str]):
-        warc_struct = None
-        response_struct = None
-        if warc is not None:
-            warc_struct = (warc.warc_version, warc.warc_headers or {})
-            response_struct = (
-                warc.body,
-                warc.http_headers or {},
-                warc.http_version,
-                warc.error,
-            )
-        row = {
+    def row(self, rec: CDXRecord, warc: WARCResponse | None) -> dict:
+        return {
             "url": rec.url,
             "timestamp": parse_cdx_timestamp(rec.timestamp),
             "mimetype": rec.mime_type,
@@ -267,11 +144,31 @@ class CommonCrawlReader(DataSourceReader):
             "offset": rec.offset,
             "length": rec.length,
             "crawl_id": rec.crawl_id,
-            "warc": warc_struct,
-            "response": response_struct,
-            "cdx_url": cdx_url,
+            "warc": None if warc is None else (warc.warc_version, warc.warc_headers or {}),
+            "response": None if warc is None else (
+                warc.body, warc.http_headers or {}, warc.http_version, warc.error
+            ),
         }
-        return tuple(row.get(name) for name in fields)
+
+    def read_crawl(self, crawl_id: str):
+        """All rows of one crawl (streaming entry point reuses the batch
+        partition logic 1:1 — same URL building, fetching, parsing)."""
+        return self.read(CrawlPartition(crawl_id, self.max_results))
+
+
+class CommonCrawlDataSource(CdxDataSource):
+    reader_cls = CommonCrawlReader
+
+    @classmethod
+    def name(cls) -> str:
+        return "common_crawl"
+
+    def simpleStreamReader(self, schema: StructType) -> "CommonCrawlStreamReader":
+        """Streaming surface: each NEW crawl appearing in collinfo.json is
+        one micro-batch (the reference is batch-only; this is the natural
+        incremental extension — crawl ids are already the partition axis,
+        so the stream offset is simply the set of crawls processed)."""
+        return CommonCrawlStreamReader(schema, dict(self.options))
 
 
 class CommonCrawlStreamReader(SimpleDataSourceStreamReader):
@@ -289,7 +186,7 @@ class CommonCrawlStreamReader(SimpleDataSourceStreamReader):
         self.schema_ = schema
         self.options = options
         self.batch_reader = CommonCrawlReader(schema, options)
-        self.start_latest = _truthy(options.get("stream_start_latest", "true"))
+        self.start_latest = truthy(options.get("stream_start_latest", "true"))
 
     def _catalog_ids(self) -> list[str]:
         from duckdb_cloudflare_spark.sources.collinfo import CollInfoCatalog

@@ -25,6 +25,7 @@ escape hatch.
 from __future__ import annotations
 
 import json
+import math
 from dataclasses import dataclass
 from datetime import date, datetime
 from typing import Any, Iterator
@@ -104,16 +105,27 @@ def quote_ident(name: str) -> str:
     return '"' + name.replace('"', '""') + '"'
 
 
-def value_to_sql(v: Any) -> str:
+def sql_literal(v: Any) -> str:
+    """Value → SQLite literal, for pushed filters and generated INSERTs:
+    None as NULL, bools as 1/0, bytes as X'hex', numbers by ``repr``, any
+    other value as its quoted ``str`` (reference escaping, src/d1_scan.cpp:76-89).
+    NaN/±Inf have no SQLite literal and become NULL, which is the writer's
+    policy; ``filter_to_sql`` never pushes them."""
     if v is None:
         return "NULL"
     if isinstance(v, bool):
         return "1" if v else "0"
-    if isinstance(v, str):
-        return escape_sql_string(v)
-    if isinstance(v, (datetime, date)):
-        return escape_sql_string(str(v))
-    return str(v)
+    if isinstance(v, float):
+        return repr(v) if math.isfinite(v) else "NULL"
+    if isinstance(v, int):
+        return repr(v)
+    if isinstance(v, (bytes, bytearray)):
+        return "X'" + bytes(v).hex() + "'"
+    return escape_sql_string(str(v))
+
+
+def _pushable(v: Any) -> bool:
+    return not (isinstance(v, float) and not math.isfinite(v))
 
 
 class D1Error(Exception):
@@ -305,9 +317,9 @@ def filter_to_sql(f: Filter) -> str | None:
     """One Spark filter → SQLite condition string, or None if untranslatable."""
     for cls, op in _SIMPLE_OPS.items():
         if isinstance(f, cls):
-            if len(f.attribute) != 1:
+            if len(f.attribute) != 1 or not _pushable(f.value):
                 return None
-            return f"{quote_ident(f.attribute[0])} {op} {value_to_sql(f.value)}"
+            return f"{quote_ident(f.attribute[0])} {op} {sql_literal(f.value)}"
     if isinstance(f, IsNull) and len(f.attribute) == 1:
         return f"{quote_ident(f.attribute[0])} IS NULL"
     if isinstance(f, IsNotNull) and len(f.attribute) == 1:
@@ -318,8 +330,8 @@ def filter_to_sql(f: Filter) -> str | None:
     try:  # In is available in pyspark >= 4.1
         from pyspark.sql.datasource import In
 
-        if isinstance(f, In) and len(f.attribute) == 1:
-            vals = ", ".join(value_to_sql(v) for v in f.value)
+        if isinstance(f, In) and len(f.attribute) == 1 and all(map(_pushable, f.value)):
+            vals = ", ".join(sql_literal(v) for v in f.value)
             return f"{quote_ident(f.attribute[0])} IN ({vals})"
     except ImportError:
         pass

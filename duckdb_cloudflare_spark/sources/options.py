@@ -12,8 +12,8 @@ _SPARK_INJECTED = {"path", "paths"}
 
 CC_OPTIONS = {
     "url", "crawl_id", "filter", "from", "to", "debug", "dry_run",
-    "fetch_response", "max_results", "timeout", "offset",
-    "fixture_dir", "stream_start_latest",
+    "fetch_response", "max_results", "timeout", "fixture_dir",
+    "stream_start_latest",
 }
 
 WAYBACK_OPTIONS = {

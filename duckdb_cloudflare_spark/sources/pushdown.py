@@ -23,6 +23,11 @@ src/common_crawl_index.cpp:1333,1384):
   CC timestamp ranges (they only choose the crawl set / coarse from-to) and
   strict (>, <) Wayback timestamp comparisons (CDX from/to are inclusive).
 
+A filter never overwrites what an option or an earlier filter already set
+(``url_pattern``, ``match_type``, ``crawl_ids``, ``from_ts``, ``to_ts``):
+the request would then drop a predicate that was never sent, so such a
+filter stays untranslated and Spark applies it.
+
 ``translate_*_filter`` returns "absorbed", "kept", or None (untranslated —
 always kept). Absorption also makes the reference's debug/dry-run golden-URL
 technique work: the synthetic row is not re-filtered away by predicates the
@@ -90,6 +95,20 @@ class CdxQuerySpec:
     to_ts: str = ""
 
 
+_UNSET = CdxQuerySpec()
+
+
+def _set(spec: CdxQuerySpec, outcome: str, **values) -> str | None:
+    """Set these spec fields and return ``outcome`` — unless one of them
+    already holds another value (from an option or an earlier filter):
+    then change nothing and return None, so the filter stays residual."""
+    if any(getattr(spec, k) not in (getattr(_UNSET, k), v) for k, v in values.items()):
+        return None
+    for k, v in values.items():
+        setattr(spec, k, v)
+    return outcome
+
+
 def translate_cc_filter(f: Filter, spec: CdxQuerySpec) -> str | None:
     """Apply one filter to the CC spec. Returns "absorbed" (remove from
     plan), "kept" (contributed but Spark re-applies), or None."""
@@ -124,11 +143,9 @@ def translate_cc_filter(f: Filter, spec: CdxQuerySpec) -> str | None:
         return None
     if isinstance(f, EqualTo):
         if col == "url":
-            spec.url_pattern = str(f.value)
-            return "absorbed"
+            return _set(spec, "absorbed", url_pattern=str(f.value))
         if col == "crawl_id":
-            spec.crawl_ids = [str(f.value)]
-            return "absorbed"
+            return _set(spec, "absorbed", crawl_ids=[str(f.value)])
         if col == "statuscode":
             spec.cdx_filters.append(f"=status:{f.value}")
             return "absorbed"
@@ -139,8 +156,7 @@ def translate_cc_filter(f: Filter, spec: CdxQuerySpec) -> str | None:
     if isinstance(f, In):
         vals = [str(v) for v in f.value]
         if col == "crawl_id":
-            spec.crawl_ids = vals
-            return "absorbed"
+            return _set(spec, "absorbed", crawl_ids=vals)
         if col == "statuscode":
             # ~field:regex form — values are embedded in a regex alternation,
             # so escape metachars (EscapeRegex, internet_archive.cpp:723).
@@ -156,23 +172,18 @@ def translate_cc_filter(f: Filter, spec: CdxQuerySpec) -> str | None:
         return None
     if col == "url":
         if isinstance(f, StringStartsWith):
-            spec.url_pattern = f"{f.value}*"
-            return "absorbed"
+            return _set(spec, "absorbed", url_pattern=f"{f.value}*")
         if isinstance(f, StringEndsWith):
-            spec.url_pattern = f"*{f.value}"
-            return "absorbed"
+            return _set(spec, "absorbed", url_pattern=f"*{f.value}")
         if isinstance(f, StringContains):
-            spec.url_pattern = f"*{f.value}*"
-            return "absorbed"
+            return _set(spec, "absorbed", url_pattern=f"*{f.value}*")
     if col == "timestamp":
         # CC timestamps select the crawl set + coarse from/to: WEAKER than
         # the predicate — keep it in the plan (reference :1333,1384).
         if isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-            spec.from_ts = _ts_str(f.value)
-            return "kept"
+            return _set(spec, "kept", from_ts=_ts_str(f.value))
         if isinstance(f, (LessThan, LessThanOrEqual)):
-            spec.to_ts = _ts_str(f.value)
-            return "kept"
+            return _set(spec, "kept", to_ts=_ts_str(f.value))
     return None
 
 
@@ -208,18 +219,17 @@ def translate_wayback_filter(f: Filter, spec: CdxQuerySpec) -> str | None:
         return None
     if isinstance(f, EqualTo):
         if col == "url":
-            spec.url_pattern = str(f.value)
-            spec.match_type = "exact"
-            return "absorbed"
+            # under a wider match_type option the pattern alone is weaker
+            return _set(spec, "absorbed", url_pattern=str(f.value), match_type="exact") or _set(
+                spec, "kept", url_pattern=str(f.value)
+            )
         if col in ("statuscode", "mimetype"):
             # filter=field:regex is full-match regex — escape literal values
             # (mimetypes like application/vnd.ms-excel contain metachars).
             spec.cdx_filters.append(f"{col}:{escape_cdx_regex(str(f.value))}")
             return "absorbed"
         if col == "year":
-            spec.from_ts = str(f.value)
-            spec.to_ts = str(f.value)
-            return "absorbed"
+            return _set(spec, "absorbed", from_ts=str(f.value), to_ts=str(f.value))
         if col == "urlkey":
             spec.cdx_filters.append(f"urlkey:^{escape_cdx_regex(str(f.value))}$")
             return "absorbed"
@@ -233,17 +243,14 @@ def translate_wayback_filter(f: Filter, spec: CdxQuerySpec) -> str | None:
         return "absorbed"
     if col == "url":
         if isinstance(f, StringStartsWith):
-            spec.url_pattern = f"{f.value}*"
-            return "absorbed"
+            return _set(spec, "absorbed", url_pattern=f"{f.value}*")
         if isinstance(f, StringEndsWith):
             # '%.example.com' → url=*.example.com (domain-suffix form,
             # internet_archive_pushdown.test:462-505). The CDX domain form
             # also matches subdomain PATHS — weaker → keep in plan.
-            spec.url_pattern = f"*{f.value}"
-            return "kept"
+            return _set(spec, "kept", url_pattern=f"*{f.value}")
         if isinstance(f, StringContains):
-            spec.url_pattern = f"*{f.value}*"
-            return "absorbed"
+            return _set(spec, "absorbed", url_pattern=f"*{f.value}*")
     if col == "urlkey":
         rx = _string_filter_regex(f)
         if rx:
@@ -254,32 +261,24 @@ def translate_wayback_filter(f: Filter, spec: CdxQuerySpec) -> str | None:
         # >= / <= are exact (reference removes them,
         # internet_archive.cpp:1181-1199); strict > / < stay in the plan.
         if isinstance(f, GreaterThanOrEqual):
-            spec.from_ts = _ts_str(f.value)
-            return "absorbed"
+            return _set(spec, "absorbed", from_ts=_ts_str(f.value))
         if isinstance(f, GreaterThan):
-            spec.from_ts = _ts_str(f.value)
-            return "kept"
+            return _set(spec, "kept", from_ts=_ts_str(f.value))
         if isinstance(f, LessThanOrEqual):
-            spec.to_ts = _ts_str(f.value)
-            return "absorbed"
+            return _set(spec, "absorbed", to_ts=_ts_str(f.value))
         if isinstance(f, LessThan):
-            spec.to_ts = _ts_str(f.value)
-            return "kept"
+            return _set(spec, "kept", to_ts=_ts_str(f.value))
     if col == "year":
         # year > 2020 → from=2021; year < 2024 → to=2023
         # (src/internet_archive.cpp:1274-1311) — year-boundary exact
         if isinstance(f, GreaterThan):
-            spec.from_ts = str(int(f.value) + 1)
-            return "absorbed"
+            return _set(spec, "absorbed", from_ts=str(int(f.value) + 1))
         if isinstance(f, GreaterThanOrEqual):
-            spec.from_ts = str(int(f.value))
-            return "absorbed"
+            return _set(spec, "absorbed", from_ts=str(int(f.value)))
         if isinstance(f, LessThan):
-            spec.to_ts = str(int(f.value) - 1)
-            return "absorbed"
+            return _set(spec, "absorbed", to_ts=str(int(f.value) - 1))
         if isinstance(f, LessThanOrEqual):
-            spec.to_ts = str(int(f.value))
-            return "absorbed"
+            return _set(spec, "absorbed", to_ts=str(int(f.value)))
     return None
 
 

@@ -15,72 +15,33 @@ function (/root/reference src/internet_archive.cpp: bind :360-454, init
 - one partition per OFFSET PAGE when ``page_size`` is set (the CDX API
   supports offset pagination, :126-129) — otherwise a single partition;
   archived-page fetches fan out with bounded concurrency inside the partition
+- the schema, options, pushdown loop, dry-run/CDX-fetch ``read()`` and the
+  in-order fetch window are the scan core in ``cdx.py``, shared with
+  ``common_crawl``; this module holds what is the Wayback Machine's own
 """
 
 from __future__ import annotations
 
-import time
-from concurrent.futures import ThreadPoolExecutor
-from typing import Iterator
-
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    Filter,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import InputPartition, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
 from duckdb_cloudflare_spark.sources.cdx import (
     WAYBACK_ORDERED_FIELDS,
+    WAYBACK_SCHEMA,
+    ArchiveOrgRecord,
+    CdxDataSource,
+    CdxReader,
     build_wayback_cdx_url,
     build_wayback_page_url,
+    drain,
     parse_wayback_csv,
+    truthy,
 )
-from duckdb_cloudflare_spark.sources.pushdown import CdxQuerySpec, translate_wayback_filter
-from duckdb_cloudflare_spark.util.http import fetch_with_retry, make_transport
+from duckdb_cloudflare_spark.sources.options import WAYBACK_OPTIONS
+from duckdb_cloudflare_spark.sources.pushdown import translate_wayback_filter
+# make_transport is looked up in this module by CdxReader.read
+from duckdb_cloudflare_spark.util.http import fetch_with_retry, make_transport  # noqa: F401
 from duckdb_cloudflare_spark.util.text import parse_cdx_timestamp
-
-_BASE_SCHEMA = (
-    "url string, timestamp timestamp, urlkey string, mimetype string, statuscode int, "
-    "digest string, length bigint, "
-    "response struct<body: binary, error: string>, "
-    "year int, month int"
-)
-
-DEFAULT_MAX_RESULTS = 100
-DEFAULT_TIMEOUT_SECONDS = 180
-FETCH_CONCURRENCY = 8
-
-
-def _truthy(v: str | None) -> bool:
-    return str(v).lower() in ("true", "1", "yes")
-
-
-class WaybackMachineDataSource(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return "wayback_machine"
-
-    def schema(self) -> str:
-        from duckdb_cloudflare_spark.sources.options import (
-            WAYBACK_OPTIONS,
-            validate_options,
-        )
-
-        validate_options("wayback_machine", dict(self.options), WAYBACK_OPTIONS)
-        if _truthy(self.options.get("debug")):
-            return _BASE_SCHEMA + ", cdx_url string"
-        return _BASE_SCHEMA
-
-    def reader(self, schema: StructType) -> "WaybackReader":
-        return WaybackReader(schema, dict(self.options))
-
-    def simpleStreamReader(self, schema: StructType) -> "WaybackStreamReader":
-        """Streaming surface: poll for snapshots archived after the current
-        timestamp watermark (see WaybackStreamReader)."""
-        return WaybackStreamReader(schema, dict(self.options))
 
 
 class PagePartition(InputPartition):
@@ -89,40 +50,26 @@ class PagePartition(InputPartition):
         self.limit = limit
 
 
-class WaybackReader(DataSourceReader):
+def _int_prefix(s: str, lo: int, hi: int) -> int | None:
+    return int(s[lo:hi]) if len(s) >= hi and s[lo:hi].isdigit() else None
+
+
+class WaybackReader(CdxReader):
+    source = "wayback_machine"
+    allowed_options = WAYBACK_OPTIONS
+    base_schema = WAYBACK_SCHEMA
+    api = "Internet Archive CDX API"
+    translate = staticmethod(translate_wayback_filter)
+
     def __init__(self, schema: StructType, options: dict):
-        self.schema_ = schema
-        self.options = options
-        self.spec = CdxQuerySpec(
-            url_pattern=options.get("url", ""),
-            match_type=options.get("match_type", "exact"),
-            cdx_filters=[f for f in options.get("filter", "").split(";;") if f],
-            from_ts=options.get("from", ""),
-            to_ts=options.get("to", ""),
-        )
+        super().__init__(schema, options)
         self.collapses = [c for c in options.get("collapse", "").split(";;") if c]
-        self.debug = _truthy(options.get("debug"))
-        self.dry_run = _truthy(options.get("dry_run"))
-        self.fetch_response = _truthy(options.get("fetch_response"))
-        self.fast_latest = _truthy(options.get("fast_latest"))
-        self.max_results = int(options.get("max_results", DEFAULT_MAX_RESULTS))
+        self.fast_latest = truthy(options.get("fast_latest"))
         self.offset = int(options.get("offset", 0))
         self.page_size = int(options.get("page_size", 0))
-        self.timeout_seconds = int(options.get("timeout", DEFAULT_TIMEOUT_SECONDS))
-
-    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        for f in filters:
-            outcome = translate_wayback_filter(f, self.spec)
-            # absorbed → removed from plan; weaker → residual (pushdown.py)
-            if outcome != "absorbed":
-                yield f
 
     def partitions(self) -> list[InputPartition]:
-        if not self.spec.url_pattern:
-            raise ValueError(
-                "wayback_machine requires a URL filter. Use .option('url', 'example.com') "
-                "or WHERE url = / startswith / endswith / contains"
-            )
+        self.require_url()
         if self.page_size > 0 and not self.fast_latest:
             pages = []
             off = self.offset
@@ -135,13 +82,13 @@ class WaybackReader(DataSourceReader):
             return pages
         return [PagePartition(self.offset, self.max_results)]
 
-    def _build_url(self, partition: PagePartition) -> str:
-        # matchType inference: an explicit option wins; '*.' prefix → the CDX
-        # API treats the pattern itself as a domain query (reference emits the
-        # pattern unchanged, internet_archive_pushdown.test:462-505).
+    def cdx_url(self, partition: PagePartition) -> str:
+        # '*.' prefix → the CDX API treats the pattern itself as a domain
+        # query (reference emits the pattern unchanged,
+        # internet_archive_pushdown.test:462-505).
         return build_wayback_cdx_url(
             self.spec.url_pattern,
-            match_type=self.spec.match_type if self.spec.match_type != "exact" else self.options.get("match_type", "exact"),
+            match_type=self.spec.match_type,
             fields_needed=list(WAYBACK_ORDERED_FIELDS),
             cdx_filters=self.spec.cdx_filters,
             from_date=self.spec.from_ts,
@@ -152,67 +99,52 @@ class WaybackReader(DataSourceReader):
             offset=partition.offset,
         )
 
-    def read(self, partition: PagePartition):
-        fields = [f.name for f in self.schema_.fields]
-        cdx_url = self._build_url(partition)
-        if self.dry_run:
-            row = {name: None for name in fields}
-            if "cdx_url" in fields:
-                row["cdx_url"] = cdx_url
-            yield tuple(row[name] for name in fields)
-            return
+    def parse(self, body: bytes, partition: PagePartition) -> list[ArchiveOrgRecord]:
+        return parse_wayback_csv(body, list(WAYBACK_ORDERED_FIELDS))
 
-        transport = make_transport(self.options)
-        start = time.monotonic()
-        result = fetch_with_retry(
-            transport, cdx_url, start_time=start, timeout_seconds=self.timeout_seconds
-        )
-        if result.error:
-            raise IOError(f"Error querying Internet Archive CDX API: {result.error}")
-        records = parse_wayback_csv(result.body, list(WAYBACK_ORDERED_FIELDS))
-
-        responses: dict[int, tuple] = {}
-        if self.fetch_response and records:
-            with ThreadPoolExecutor(max_workers=FETCH_CONCURRENCY) as pool:
-                futures = {
-                    i: pool.submit(self._fetch_page, transport, rec, start, self.timeout_seconds)
-                    for i, rec in enumerate(records)
-                }
-                responses = {i: fut.result() for i, fut in futures.items()}
-
-        for i, rec in enumerate(records):
-            # year/month derived from the raw 14-char timestamp string
-            # (src/internet_archive.cpp:663-678).
-            year = int(rec.timestamp[:4]) if len(rec.timestamp) >= 4 and rec.timestamp[:4].isdigit() else None
-            month = int(rec.timestamp[4:6]) if len(rec.timestamp) >= 6 and rec.timestamp[4:6].isdigit() else None
-            row = {
-                "url": rec.original,
-                "timestamp": parse_cdx_timestamp(rec.timestamp),
-                "urlkey": rec.urlkey,
-                "mimetype": rec.mime_type,
-                "statuscode": rec.status_code,
-                "digest": rec.digest,
-                "length": rec.length,
-                "response": responses.get(i),
-                "year": year,
-                "month": month,
-                "cdx_url": cdx_url,
-            }
-            yield tuple(row.get(name) for name in fields)
-
-    @staticmethod
-    def _fetch_page(transport, rec, start: float, timeout_seconds: int) -> tuple:
+    def fetch(self, transport, rec: ArchiveOrgRecord, start: float) -> tuple:
         """Full GET of the raw archived page; errors as row data
         (src/internet_archive.cpp:271-353)."""
         if not rec.timestamp or not rec.original:
             return (None, "Missing timestamp or URL")
-        url = build_wayback_page_url(rec.timestamp, rec.original)
         result = fetch_with_retry(
-            transport, url, start_time=start, timeout_seconds=timeout_seconds
+            transport,
+            build_wayback_page_url(rec.timestamp, rec.original),
+            start_time=start,
+            timeout_seconds=self.timeout_seconds,
         )
         if result.error:
             return (None, result.error)
         return (result.body, "")
+
+    def row(self, rec: ArchiveOrgRecord, response: tuple | None) -> dict:
+        return {
+            "url": rec.original,
+            "timestamp": parse_cdx_timestamp(rec.timestamp),
+            "urlkey": rec.urlkey,
+            "mimetype": rec.mime_type,
+            "statuscode": rec.status_code,
+            "digest": rec.digest,
+            "length": rec.length,
+            "response": response,
+            # year/month from the raw 14-char timestamp string
+            # (src/internet_archive.cpp:663-678)
+            "year": _int_prefix(rec.timestamp, 0, 4),
+            "month": _int_prefix(rec.timestamp, 4, 6),
+        }
+
+
+class WaybackMachineDataSource(CdxDataSource):
+    reader_cls = WaybackReader
+
+    @classmethod
+    def name(cls) -> str:
+        return "wayback_machine"
+
+    def simpleStreamReader(self, schema: StructType) -> "WaybackStreamReader":
+        """Streaming surface: poll for snapshots archived after the current
+        timestamp watermark (see WaybackStreamReader)."""
+        return WaybackStreamReader(schema, dict(self.options))
 
 
 class WaybackStreamReader(SimpleDataSourceStreamReader):
@@ -241,15 +173,12 @@ class WaybackStreamReader(SimpleDataSourceStreamReader):
         opts["from"] = from_ts
         if to_ts:
             opts["to"] = to_ts
-        reader = WaybackReader(self.schema_, opts)
-        [partition] = reader.partitions()
         lower = parse_cdx_timestamp(from_ts)
-        rows = [
+        return [
             r
-            for r in reader.read(partition)
+            for r in drain(WaybackReader(self.schema_, opts))
             if r[self.ts_index] is not None and r[self.ts_index] > lower
         ]
-        return rows
 
     def read(self, start: dict):
         rows = self._fetch(start["from_ts"], None)

@@ -411,6 +411,34 @@ class TestD1Source:
         ids = sorted(r["id"] for r in df.collect())
         assert ids == [1, 3]
 
+    def test_nonfinite_and_bytes_filters(self, registered, d1_db):
+        # NaN/Inf have no SQLite literal: such filters stay in Spark; bytes
+        # are pushed as X'hex'. Spark semantics decide every result.
+        from pyspark.sql import functions as F
+
+        users = registered.read.format("d1").options(table="users", **_d1_opts(d1_db)).load()
+
+        def ids(cond):
+            return sorted(r["id"] for r in users.filter(cond).collect())
+
+        assert ids(F.col("score") == float("nan")) == []
+        assert ids(F.col("score") < float("inf")) == [1, 2, 3]
+        assert ids(F.col("score") > float("-inf")) == [1, 2, 3]
+        assert ids(F.col("score").isin(91.5, float("nan"))) == [1]
+        assert ids(F.col("avatar") == F.lit(bytearray(b"\x00\xff"))) == [1]
+
+    def test_filter_literals(self):
+        from pyspark.sql.datasource import EqualTo, In, LessThan
+
+        from duckdb_cloudflare_spark.sources.d1 import filter_to_sql, sql_literal
+
+        assert sql_literal(b"ab") == "X'6162'"
+        assert filter_to_sql(EqualTo(("b",), b"ab")) == "\"b\" = X'6162'"
+        assert filter_to_sql(EqualTo(("x",), float("nan"))) is None
+        assert filter_to_sql(LessThan(("x",), float("inf"))) is None
+        assert filter_to_sql(In(("x",), (1.5, float("nan")))) is None
+        assert filter_to_sql(In(("x",), (1.5, 2))) == '"x" IN (1.5, 2)'
+
     def test_limit_option(self, registered, d1_db):
         df = (
             registered.read.format("d1")
@@ -866,6 +894,97 @@ class TestPushdownTranslation:
         spec = CdxQuerySpec()
         translate_cc_filter(In(("mimetype",), ("text/html", "image/svg+xml")), spec)
         assert "~mime:(text/html|image/svg%5C+xml)" in spec.cdx_filters
+
+
+class TestPushdownKeepsPinnedFields:
+    """A pushed filter never overwrites a url pattern, match type, crawl set
+    or from/to bound that an option or an earlier filter already set: it
+    stays residual, so Spark still applies it."""
+
+    @staticmethod
+    def _push(source_cls, options, filters):
+        from pyspark.sql.types import StringType, StructField, StructType
+
+        reader = source_cls(dict(options, dry_run="true")).reader(
+            StructType([StructField("cdx_url", StringType())])
+        )
+        residual = list(reader.pushFilters(filters))
+        [(url,)] = [row for p in reader.partitions() for row in reader.read(p)]
+        return residual, url
+
+    def test_cc_second_url_filter_stays_residual(self):
+        from pyspark.sql.datasource import StringContains, StringStartsWith
+
+        from duckdb_cloudflare_spark.sources.common_crawl import CommonCrawlDataSource
+
+        contains = StringContains(("url",), "news")
+        residual, url = self._push(
+            CommonCrawlDataSource, {"crawl_id": CC_CRAWL},
+            [StringStartsWith(("url",), "https://a.com/"), contains],
+        )
+        assert residual == [contains]
+        assert "?url=https://a.com/*&" in url
+
+    def test_cc_url_option_wins_over_filter(self):
+        from pyspark.sql.datasource import EqualTo, In
+
+        from duckdb_cloudflare_spark.sources.common_crawl import CommonCrawlDataSource
+
+        eq, crawls = EqualTo(("url",), "b.com/x"), In(("crawl_id",), ("C1", "C2"))
+        residual, url = self._push(
+            CommonCrawlDataSource, {"url": "a.com/*", "crawl_id": CC_CRAWL}, [eq, crawls]
+        )
+        assert residual == [eq, crawls]
+        assert url.startswith(f"https://index.commoncrawl.org/{CC_CRAWL}-index?url=a.com/*&")
+
+    def test_wayback_year_after_timestamp_stays_residual(self):
+        from datetime import datetime
+
+        from pyspark.sql.datasource import GreaterThanOrEqual
+
+        from duckdb_cloudflare_spark.sources.wayback import WaybackMachineDataSource
+
+        year = GreaterThanOrEqual(("year",), 2021)
+        residual, url = self._push(
+            WaybackMachineDataSource, {"url": "a.com"},
+            [GreaterThanOrEqual(("timestamp",), datetime(2021, 6, 1)), year],
+        )
+        assert residual == [year]
+        assert "&from=20210601&" in url
+
+    def test_wayback_exact_url_under_prefix_match_type_is_kept(self):
+        from pyspark.sql.datasource import EqualTo
+
+        from duckdb_cloudflare_spark.sources.wayback import WaybackMachineDataSource
+
+        eq = EqualTo(("url",), "a.com/x")
+        residual, url = self._push(WaybackMachineDataSource, {"match_type": "prefix"}, [eq])
+        # the prefix request is wider than url = 'a.com/x': Spark re-applies it
+        assert residual == [eq]
+        assert "?url=a.com/x&" in url and "&matchType=prefix" in url
+
+    def test_wayback_url_option_wins_over_filter(self):
+        from pyspark.sql.datasource import EqualTo
+
+        from duckdb_cloudflare_spark.sources.wayback import WaybackMachineDataSource
+
+        eq = EqualTo(("url",), "b.com/y")
+        residual, url = self._push(
+            WaybackMachineDataSource, {"url": "a.com/", "match_type": "prefix"}, [eq]
+        )
+        assert residual == [eq]
+        assert "?url=a.com/&" in url and "&matchType=prefix" in url
+
+    def test_same_value_is_absorbed(self):
+        from pyspark.sql.datasource import EqualTo
+
+        from duckdb_cloudflare_spark.sources.wayback import WaybackMachineDataSource
+
+        residual, url = self._push(
+            WaybackMachineDataSource, {"url": "a.com/x"}, [EqualTo(("url",), "a.com/x")]
+        )
+        assert residual == []
+        assert "matchType" not in url
 
 
 class TestR2IcebergConf:
@@ -1351,6 +1470,18 @@ class TestUnknownOptionContract:
                 .load()
                 .schema
             )
+
+    def test_cc_offset_option_raises(self, registered):
+        # Common Crawl has no CDX offset (only Wayback pages by offset), so
+        # the option is unknown rather than silently ignored
+        import pytest
+
+        from duckdb_cloudflare_spark.sources.api import read_common_crawl
+
+        with pytest.raises(Exception, match="unknown option.*offset"):
+            read_common_crawl(
+                registered, "example.com/*", offset=5, crawl_id=CC_CRAWL, dry_run="true"
+            ).schema
 
     def test_d1_unknown_option_raises(self, registered, d1_db):
         import pytest

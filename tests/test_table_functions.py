@@ -54,21 +54,30 @@ def tf_fixture_dir(tmp_path_factory):
 
 
 class TestSchemasPinnedToDataSourceDDL:
-    def test_cc_schema_matches_datasource_ddl(self, spark):
+    """Each table function's analyze schema is its DataSource's schema()
+    DDL, with ``debug`` on (``cdx_url`` appended) and off."""
+
+    @staticmethod
+    def _check(udtf, data_source, url):
         from pyspark.sql.types import StructType
 
-        from duckdb_cloudflare_spark.functions.table_functions import CC_SCHEMA
-        from duckdb_cloudflare_spark.sources.common_crawl import _BASE_SCHEMA
+        for debug in ("false", "true"):
+            opts = {"url": url, "debug": debug}
+            analyzed = udtf.analyze(**opts).schema
+            assert analyzed == StructType.fromDDL(data_source(opts).schema())
+            assert ("cdx_url" in analyzed.fieldNames()) == (debug == "true")
 
-        assert CC_SCHEMA == StructType.fromDDL(_BASE_SCHEMA)
+    def test_cc_schema_matches_datasource_ddl(self, spark):
+        from duckdb_cloudflare_spark.functions.table_functions import CommonCrawlIndexUDTF
+        from duckdb_cloudflare_spark.sources.common_crawl import CommonCrawlDataSource
+
+        self._check(CommonCrawlIndexUDTF, CommonCrawlDataSource, "*.example.com/*")
 
     def test_wayback_schema_matches_datasource_ddl(self, spark):
-        from pyspark.sql.types import StructType
+        from duckdb_cloudflare_spark.functions.table_functions import WaybackMachineUDTF
+        from duckdb_cloudflare_spark.sources.wayback import WaybackMachineDataSource
 
-        from duckdb_cloudflare_spark.functions.table_functions import WAYBACK_SCHEMA
-        from duckdb_cloudflare_spark.sources.wayback import _BASE_SCHEMA
-
-        assert WAYBACK_SCHEMA == StructType.fromDDL(_BASE_SCHEMA)
+        self._check(WaybackMachineUDTF, WaybackMachineDataSource, "example.com")
 
 
 class TestCommonCrawlUDTF:

@@ -252,3 +252,56 @@ class TestStreamingWarcEmission:
         # in-CDX-order emission preserved
         urls = [first[0]] + [r[0] for r in rest]
         assert urls == [f"http://x.com/{i}" for i in range(n)]
+
+
+class _CountingWaybackTransport:
+    """Serves an n-record Wayback CDX page and counts archived-page GETs."""
+
+    def __init__(self, n: int):
+        self.n = n
+        self.page_calls = 0
+
+    def get(self, url: str, headers=None) -> bytes:
+        if "/cdx/search/cdx" in url:
+            return "\n".join(
+                f"com,x)/{i} 20250101000000 http://x.com/{i} text/html 200 D{i} 100"
+                for i in range(self.n)
+            ).encode()
+        self.page_calls += 1
+        return b"<html>page</html>"
+
+    def post(self, url: str, body: bytes, headers=None) -> bytes:
+        raise ValueError("unexpected POST")
+
+
+class TestStreamingWaybackEmission:
+    def test_first_row_yields_before_last_fetch(self, monkeypatch):
+        from pyspark.sql.types import StringType, StructField, StructType
+
+        from duckdb_cloudflare_spark.sources import wayback as wb_mod
+        from duckdb_cloudflare_spark.sources.cdx import FETCH_CONCURRENCY
+        from duckdb_cloudflare_spark.sources.wayback import PagePartition, WaybackReader
+
+        n = 40
+        transport = _CountingWaybackTransport(n)
+        monkeypatch.setattr(wb_mod, "make_transport", lambda options: transport)
+
+        # only field NAMES matter to read() — no SparkSession needed
+        names = ["url", "timestamp", "urlkey", "mimetype", "statuscode", "digest",
+                 "length", "response", "year", "month"]
+        reader = WaybackReader(
+            StructType([StructField(f, StringType()) for f in names]),
+            {"url": "x.com/", "fetch_response": "true", "max_results": str(n)},
+        )
+        gen = reader.read(PagePartition(0, n))
+        first = next(gen)
+        # bounded prefetch: after the first row at most window+1 page fetches
+        # have been REQUESTED, not the whole partition
+        assert transport.page_calls <= 2 * FETCH_CONCURRENCY + 1
+        assert transport.page_calls < n
+        rest = list(gen)
+        assert transport.page_calls == n
+        # in-CDX-order emission, each row with its own page
+        rows = [first] + rest
+        assert [r[0] for r in rows] == [f"http://x.com/{i}" for i in range(n)]
+        assert all(r[7] == (b"<html>page</html>", "") for r in rows)

@@ -106,3 +106,30 @@ def test_readstream_end_to_end(spark, wb_fixtures):
     q.awaitTermination()
     got = spark.table("wb_stream").select("url").collect()
     assert {r["url"] for r in got} == {"http://example.com/a", "http://example.com/b"}
+
+
+def test_paged_stream_reads_every_page(spark, tmp_path):
+    # page_size splits one poll into offset pages; the stream reads them all
+    manifest = {}
+    for page in range(3):
+        url = build_wayback_cdx_url(
+            "example.com",
+            fields_needed=list(WAYBACK_ORDERED_FIELDS),
+            from_date=EPOCH,
+            max_results=10,
+            offset=10 * page,
+        )
+        rows = [(f"p{page}-{i}", f"202406{page + 1:02d}12{i:02d}00") for i in range(10)]
+        (tmp_path / f"page{page}.csv").write_text(_csv(rows))
+        manifest[url] = f"page{page}.csv"
+    (tmp_path / "manifest.json").write_text(json.dumps(manifest))
+
+    opts = {"url": "example.com", "fixture_dir": str(tmp_path),
+            "page_size": "10", "max_results": "30"}
+    src = WaybackMachineDataSource(opts)
+    r = src.simpleStreamReader(_parse_datatype_string(src.schema()))
+    rows, end = r.read(r.initialOffset())
+    assert [row[0] for row in rows] == [
+        f"http://example.com/p{page}-{i}" for page in range(3) for i in range(10)
+    ]
+    assert end == {"from_ts": "20240603120900"}
