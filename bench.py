@@ -404,14 +404,11 @@ def main() -> None:
         # local[32] with cached hot tables (GC churn dominates and
         # destabilizes timings). Bench-scoped, not a library default.
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        # The bench caches its hot tables repartitioned by cache_tables' size
-        # rule (below), so the per-operator partition-count probe in
-        # ensure_parallelism is pure overhead here — skip it, as its
-        # docstring prescribes for well-partitioned deployments. The tiny
-        # uncached embeddings table then runs its Arrow matmuls in one
-        # partition, which at bench scale is faster than 32 micro-tasks.
-        "spark.duckdb_cloudflare.assumeParallel": "true",
     }
+    # Operator inputs are sized by util.sizing's one rule: an input is
+    # spread only when its size estimate calls for more than one partition
+    # (the cached hot tables already are; sf0.1's uncached ~0.8 MB
+    # embeddings go to min(11, cores) tasks).
     # Experiment hook: SPARK_GRAFT_BENCH_CONF='{"k": "v", ...}' overlays the
     # bench session conf (unset → the shipped defaults above).
     extra = os.environ.get("SPARK_GRAFT_BENCH_CONF")
@@ -704,9 +701,9 @@ def main() -> None:
             Q.cache_tables(spark, sf1_dir)
             # embeddings is excluded from the DEFAULT cache set (nested
             # arrays decode through the non-codegen InMemoryRelation path,
-            # a loss at sf0.1's 5k vectors) — but at sf1 the single-file
-            # scan runs p05's Arrow matmul as ONE task under
-            # assumeParallel, and full-parallelism caching re-measured ~2×
+            # a loss at sf0.1's 5k vectors) — but at sf1 a one-task scan
+            # of the single file ran p05's Arrow matmul, and
+            # full-parallelism caching re-measured ~2×
             # faster (1.98 → 1.07 s isolated; the uncached lane row also
             # showed GC-debris swings up to 7 s). Scale flips the trade.
             Q.cache_tables(

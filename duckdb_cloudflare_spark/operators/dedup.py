@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 from pyspark.sql.window import Window
-from pyspark.storagelevel import StorageLevel
 
 from duckdb_cloudflare_spark.operators.text_analysis import (
     fingerprint,
@@ -39,28 +38,8 @@ from duckdb_cloudflare_spark.operators.text_analysis import (
     word_ngrams,
 )
 from duckdb_cloudflare_spark.util import vectors
-
-
-def ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Round-robin repartition ONLY when the input is under-parallelized
-    (fewer partitions than cores — e.g. one small parquet file). At scale the
-    scan already yields hundreds of partitions and this is a no-op, so the
-    extra shuffle is paid exactly when it is cheapest and never when the
-    input is large. The expensive hashing/signature maps below are
-    higher-order-function expressions (interpreted, not codegen) — leaving
-    them on a single partition serializes the whole operator.
-
-    The partition-count probe costs one driver-side RDD translation per
-    call; pipelines whose inputs are known to be well-partitioned (many
-    files, or the hot-table cache) can skip it globally with
-    ``spark.conf.set("spark.duckdb_cloudflare.assumeParallel", "true")``."""
-    spark = df.sparkSession
-    if spark.conf.get("spark.duckdb_cloudflare.assumeParallel", "false") == "true":
-        return df
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+from duckdb_cloudflare_spark.util.caching import one_slot_persist
+from duckdb_cloudflare_spark.util.sizing import ensure_parallelism, exchange_width
 
 
 # ---------------------------------------------------------------------------
@@ -217,8 +196,8 @@ def minhash_lsh_pairs(
 
     Plan shape: map (shingle+sign) → explode bands → shuffle on (band, hash)
     → within-bucket self-join → distinct pairs → verify. The band-bucket join
-    is the only quadratic step and operates on tiny groups; a global
-    ``spark.sql.shuffle.partitions`` worth of parallelism carries it.
+    is the only quadratic step and operates on tiny groups; the session's
+    default shuffle width carries it.
     """
     # Cheap emptiness filter HERE so it pushes down to the scan; a filter on
     # the signature/shingle expression would be pushed below the repartition
@@ -266,9 +245,9 @@ def _lsh_verified_pairs(
     # most expensive map in the operator 3×. Production minhash pipelines
     # materialize signatures for the same reason. persist (not
     # localCheckpoint) keeps recompute-on-executor-loss semantics for real
-    # clusters and avoids AQE's noisy stale-accumulator races; entries are
-    # LRU-evicted, and callers batching many dedup jobs can clearCache().
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    # clusters and avoids AQE's noisy stale-accumulator races. One slot:
+    # the next call releases this base, as does queries.uncache_tables.
+    base = one_slot_persist("dedup._lsh_verified_pairs", base)
     # Single 64-bit key per (band, hash): collisions across bands are
     # astronomically unlikely and harmless (they only add candidates).
     # No isNotNull filter on sig: callers pre-filter empty text (the only
@@ -572,7 +551,7 @@ def simhash_pairs(
     )
     # The self-join below consumes `base` twice; without materialization the
     # simhash computation runs 2× (it lives above the exchange).
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    base = one_slot_persist("dedup.simhash_pairs", base)
     blocks = base.select(
         "id",
         "sh",
@@ -731,7 +710,7 @@ def embedding_neardup_pairs(
     )
     # Self-joined twice below; materialize so the num_planes interpreted dot
     # products per row run once, not once per join side.
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    base = one_slot_persist("dedup.embedding_neardup_pairs", base)
     l, r = base.alias("l"), base.alias("r")
     return (
         l.join(r, (F.col("l.sk") == F.col("r.sk")) & (F.col("l.id") < F.col("r.id")))
@@ -800,10 +779,10 @@ def duplicated_ngram_stats(
     the bench box); the window shares ONE map pass and one exchange —
     measured 25.8 s → 4.3 s at the sf1 lane, rows identical. The
     exchange is sized from the input's own partitioning
-    (``_exchange_width``, shared with _pair_intersections). Never a
-    quadratic pair blow-up — this never materializes doc pairs, unlike
-    Jaccard; a hot shingle ("click here to subscribe") is one window
-    group, bounded by the docs that actually contain it.
+    (``util.sizing.exchange_width``, shared with _pair_intersections).
+    Never a quadratic pair blow-up — this never materializes doc pairs,
+    unlike Jaccard; a hot shingle ("click here to subscribe") is one
+    window group, bounded by the docs that actually contain it.
 
     Docs with fewer than k tokens are excluded (no k-shingles to score).
 
@@ -821,7 +800,7 @@ def duplicated_ngram_stats(
         .select(id_col, F.explode(shingles(F.lower(F.col(text_col)), k)).alias("sh"))
         .select(id_col, F.xxhash64("sh").alias("shingle"))
     )
-    inv = inv.repartition(_exchange_width(src), "shingle")
+    inv = inv.repartition(exchange_width(src), "shingle")
     scored = inv.withColumn(
         "n_docs_with", F.count(F.lit(1)).over(_W.partitionBy("shingle"))
     )
@@ -1051,17 +1030,6 @@ def lowered_tokens(text_col: str = "text") -> Column:
     return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
 
 
-def _exchange_width(src: DataFrame) -> int:
-    """Width of a shingle- or pair-keyed exchange, sized from the input's
-    own partitioning: ``max(spark.sql.shuffle.partitions, input
-    partitions)`` — scale-adaptive, not a box constant."""
-    try:
-        sp = int(src.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        sp = 200
-    return max(sp, src.rdd.getNumPartitions())
-
-
 def _doc_freq_filter(
     inv: DataFrame, prefilter_singletons: bool, max_doc_freq: int | None
 ) -> DataFrame:
@@ -1105,12 +1073,12 @@ def _pair_intersections(
     a pair occurs once per shared shingle, and different shingles hash
     to different partitions, so within one map partition multiplicity is
     ~1 and the partial hash pass is pure overhead feeding a final agg
-    pinned at spark.sql.shuffle.partitions (8 on the bench box: 8.5 M
+    pinned at the session's shuffle width (8 on the bench box: 8.5 M
     groups on 8 of 32 cores). Fix: repartition the pair stream by the
     PAIR KEY at a width derived from the input's own partitioning
-    (max(shuffle.partitions, input partitions) — scale-adaptive, not a
-    box constant), so the one aggregation that matters runs fused after
-    the exchange at full width. Same exchange-count (the repartition IS
+    (``util.sizing.exchange_width``: max(cores, input partitions) —
+    scale-adaptive, not a box constant), so the one aggregation that
+    matters runs fused after the exchange at full width. Same exchange-count (the repartition IS
     the aggregation's exchange), measured 12.8 s -> 3.7 s for p34 at
     sf1, rows identical. The join's own exchange is widened the same
     way (probe: 12.8 -> 10.4 s alone) and stays ReusedExchange-shared
@@ -1122,14 +1090,16 @@ def _pair_intersections(
         .select(id_col, F.array_distinct(word_ngrams(F.col("ts"), k)).alias("sh"))
     )
     # n_sh below the explode so Generate never carries the array (r15);
-    # the 8-byte key is hashed after it
+    # the 8-byte key is hashed after it. explode_outer yields the same rows
+    # (every sh is non-empty) but is exempt from InferFiltersFromGenerate,
+    # whose inferred size(sh) > 0 Filter would shingle each row twice.
     inv = (
         shins.select(id_col, "sh", F.size("sh").alias("n_sh"))
-        .select(id_col, F.explode("sh").alias("g"), "n_sh")
+        .select(id_col, F.explode_outer("sh").alias("g"), "n_sh")
         .select(id_col, F.xxhash64("g").alias("shingle"), "n_sh")
     )
     inv = _doc_freq_filter(inv, prefilter_singletons, max_doc_freq)
-    n_pair = _exchange_width(src)
+    n_pair = exchange_width(src)
     inv = inv.repartition(n_pair, "shingle")
     a = inv.select(F.col(id_col).alias("id_a"), "shingle", F.col("n_sh").alias("n_a"))
     b = inv.select(

@@ -28,12 +28,9 @@ from pyspark.sql.functions import arrow_udf, broadcast
 from pyspark.sql.types import ArrayType, IntegerType, LongType
 from pyspark.sql.window import Window
 
-from duckdb_cloudflare_spark.operators.dedup import (
-    _hyperplane_sketch,
-    cosine_similarity,
-    ensure_parallelism,
-)
+from duckdb_cloudflare_spark.operators.dedup import _hyperplane_sketch, cosine_similarity
 from duckdb_cloudflare_spark.util import vectors
+from duckdb_cloudflare_spark.util.sizing import ensure_parallelism
 
 # Bounded (ADVICE r2): hits only matter within one query's corpus/query
 # double use of the same centroids, so a handful of entries suffices; an

@@ -96,28 +96,30 @@ def fingerprint(text: Column) -> Column:
     return F.md5(normalize_text(text))
 
 
-def lang_scores(text: Column) -> Column:
-    """Map lang → stopword-hit count for the heuristic language identifier."""
-    toks = tokens(F.lower(text))
-    entries = []
-    for lang, words in STOPWORDS.items():
-        wordlist = F.array(*[F.lit(w) for w in words])
-        hits = F.size(F.filter(toks, lambda tok: F.array_contains(wordlist, tok)))
-        entries.extend([F.lit(lang), hits])
-    return F.create_map(*entries)
-
-
 def identify_language(text: Column) -> Column:
     """Heuristic language ID: argmax of per-language stopword hits, 'und' when
-    no stopword matches. Deterministic tie-break: lexicographically smallest
-    language code among the tied leaders."""
-    scores = lang_scores(text)
-    langs = sorted(STOPWORDS)
-    best = F.greatest(*[scores[F.lit(lang)] for lang in langs])
-    winner = F.coalesce(
-        *[F.when(scores[F.lit(lang)] == best, F.lit(lang)) for lang in langs]
-    )
-    return F.when(best > 0, winner).otherwise(F.lit("und"))
+    no stopword matches (NULL and blank text included). Deterministic
+    tie-break: lexicographically smallest language code among the tied
+    leaders.
+
+    The lowered, split text is bound once to a lambda variable (a
+    one-element ``transform``), each language's hits are counted once into
+    ``struct(hits, -rank, lang)``, and ``array_max`` picks the winner; the
+    trailing ``(0, 1, 'und')`` outranks every language at zero hits."""
+
+    def hits(toks: Column, words: tuple[str, ...]) -> Column:
+        wordlist = F.array(*map(F.lit, words))
+        return F.size(F.filter(toks, lambda t: F.array_contains(wordlist, t)))
+
+    def best(toks: Column) -> Column:
+        scored = [
+            F.struct(hits(toks, STOPWORDS[lang]), F.lit(-rank), F.lit(lang))
+            for rank, lang in enumerate(sorted(STOPWORDS))
+        ]
+        und = F.struct(F.lit(0), F.lit(1), F.lit("und"))
+        return F.array_max(F.array(*scored, und))["col3"]
+
+    return F.transform(F.array(F.split(F.trim(F.lower(text)), r"\s+")), best)[0]
 
 
 def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -20,8 +20,6 @@ order-insensitively with columns sorted by name, so:
 
 from __future__ import annotations
 
-import math
-import os
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -30,6 +28,11 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from duckdb_cloudflare_spark.util.caching import release_all_slots
+from duckdb_cloudflare_spark.util.sizing import (
+    CACHE_BYTES_PER_PART,
+    PY_OP_BYTES_PER_PART,
+    partitions_for,
+)
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -64,31 +67,6 @@ def register(name: str, oracle: str | None = None, description: str = ""):
 _TABLE_CACHE: dict[str, DataFrame] = {}
 
 
-# Source parquet bytes per cached partition: ~1.4 MB for JVM consumers (sf0.1
-# lineitem's 10.8 MB on 8), ~75 KB for per-row Python/codec consumers.
-CACHE_BYTES_PER_PART = 1_400_000
-PY_OP_BYTES_PER_PART = 75_000
-
-
-def _src_bytes(path: str) -> int:
-    """Data bytes of a file or of a parquet directory tree, skipping
-    ``.``/``_`` entries; 0 on any OSError (remote or missing path)."""
-    try:
-        if not os.path.isdir(path):
-            return os.path.getsize(path)
-        total = 0
-        for root, dirs, files in os.walk(path):
-            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-            total += sum(
-                os.path.getsize(os.path.join(root, f))
-                for f in files
-                if not f.startswith((".", "_"))
-            )
-        return total
-    except OSError:
-        return 0
-
-
 def cache_tables(
     spark: SparkSession,
     sf_dir: str,
@@ -104,11 +82,11 @@ def cache_tables(
     conf; the repartition paid once here gives downstream map stages their
     parallelism.
 
-    One rule sizes every table: ``n = clamp(ceil(source_bytes / rate), 1,
-    cores)``, with ``rate`` = ``PY_OP_BYTES_PER_PART`` for
-    ``python_op_tables`` (per-row Python consumers fan out sooner) and
-    ``CACHE_BYTES_PER_PART`` otherwise. An explicit ``parallelism``
-    overrides the rule.
+    ``util.sizing``'s one rule sizes every table: ``n = clamp(ceil(bytes /
+    rate), 1, cores)`` over the scan's size estimate, with ``rate`` =
+    ``PY_OP_BYTES_PER_PART`` for ``python_op_tables`` (per-row Python
+    consumers fan out sooner) and ``CACHE_BYTES_PER_PART`` otherwise. An
+    explicit ``parallelism`` overrides the rule.
 
     Each table is loaded, repartitioned, cached and counted as its own
     Spark job, all tables at once from a thread pool that carries the
@@ -120,7 +98,6 @@ def cache_tables(
     column deserializes through the generic (non-codegen) path out of the
     columnar cache, which measured SLOWER than re-reading parquet — nested
     types don't benefit from InMemoryRelation."""
-    cores = spark.sparkContext.defaultParallelism
     root = sf_dir.rstrip("/")
     todo = [t for t in dict.fromkeys(tables) if _cached(spark, sf_dir, t) is None]
     if not todo:
@@ -129,10 +106,9 @@ def cache_tables(
         _pin_events_confs(spark)
 
     def _cache_one(t: str) -> DataFrame:
-        path = f"{root}/{t}.parquet"
-        rate = PY_OP_BYTES_PER_PART if t in python_op_tables else CACHE_BYTES_PER_PART
-        n = parallelism or min(cores, max(1, math.ceil(_src_bytes(path) / rate)))
         df = _scan(spark, sf_dir, t)
+        rate = PY_OP_BYTES_PER_PART if t in python_op_tables else CACHE_BYTES_PER_PART
+        n = parallelism or partitions_for(df, rate)
         if df.rdd.getNumPartitions() != n:
             df = df.repartition(n)
         df = df.cache()

@@ -18,6 +18,7 @@ from duckdb_cloudflare_spark.operators import multimodal as M
 from duckdb_cloudflare_spark.operators import similarity as S
 from duckdb_cloudflare_spark.operators import text_analysis as T
 from duckdb_cloudflare_spark.queries import load, register
+from duckdb_cloudflare_spark.util.sizing import ensure_parallelism
 
 _NORM_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 _TOKENS_SQL = "string_split_regex(trim(text), '\\s+')"
@@ -61,7 +62,7 @@ def p01_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="token counting (whitespace + BPE-ish regex) and quality ratios",
 )
 def p02_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
+    d = ensure_parallelism(load(spark, sf_dir, "documents"))
     toks = T.tokens(F.col("text"))
     n_tokens = F.size(toks).cast("bigint")
     en_stop = F.array(*[F.lit(s) for s in T.STOPWORDS["en"]])
@@ -120,7 +121,7 @@ def p03_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "lexicographic tie-break, 'und' when nothing matches",
 )
 def p04_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
+    d = ensure_parallelism(load(spark, sf_dir, "documents"))
     return d.select(
         "doc_id",
         F.col("lang").alias("lang_true"),
@@ -250,7 +251,7 @@ def p11_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shape — bytes originate storage-side, decode is the only Arrow hop;
     # see synth_assets_with_meta). The separate attach/with_asset_meta
     # operators stay composable and tested in tests/test_multimodal.py.
-    d = D.ensure_parallelism(load(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = ensure_parallelism(load(spark, sf_dir, "documents").select("doc_id", "text"))
     decoded = M.synth_assets_with_meta(d, keep=("doc_id",))
     return decoded.select(
         "doc_id",
@@ -273,7 +274,7 @@ def p11_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     "containers into one row per frame (1-in/N-out mapInPandas, no shuffle)",
 )
 def p12_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
+    d = ensure_parallelism(load(spark, sf_dir, "documents"))
     frames = M.sample_video_frames(M.attach_fake_assets(d), every_n=2)
     return frames.select("doc_id", "frame_idx")
 
@@ -320,7 +321,7 @@ def p12_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "synthetic payload is reconstructible in SQL) — upgraded from rows-only.",
 )
 def p13_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = D.ensure_parallelism(load(spark, sf_dir, "documents")).filter(
+    d = ensure_parallelism(load(spark, sf_dir, "documents")).filter(
         F.col("doc_id") % 3 == 0
     )
     resized = M.resize_image(M.attach_fake_assets(d), 64, 64)
@@ -398,7 +399,7 @@ def p15_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     "single shuffle",
 )
 def p16_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
+    d = ensure_parallelism(load(spark, sf_dir, "documents"))
     toks = d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("t0")).select(
         "doc_id", F.lower("t0").alias("tok")
     )
@@ -453,7 +454,7 @@ def p17_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keeps the whole query ONE job — the separate count action cost a full
     # scheduler round trip per execution.
     nd = raw.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
-    d = D.ensure_parallelism(raw)
+    d = ensure_parallelism(raw)
     toks = d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("tok")).select(
         "doc_id", F.lower("tok").alias("tok")
     )
@@ -584,7 +585,7 @@ def p20_transitive_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "frequency is a (doc_id, tok) groupBy with partial aggregation",
 )
 def p21_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
+    d = ensure_parallelism(load(spark, sf_dir, "documents"))
     t = F.split(F.trim(F.col("text")), " ")
     base = d.select("doc_id", t.alias("t")).filter(F.size("t") > 1)
     bigrams = T.word_ngrams(F.col("t"), 2)
@@ -902,7 +903,7 @@ def p27_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 def p28_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import broadcast
 
-    d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
+    d = ensure_parallelism(load(spark, sf_dir, "documents"))
     toks = d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("tok")).select(
         "doc_id", F.lower("tok").alias("tok")
     )
@@ -1325,7 +1326,7 @@ def p36_dup_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 def p37_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import broadcast
 
-    d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
+    d = ensure_parallelism(load(spark, sf_dir, "documents"))
     toks = d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("tok")).select(
         "doc_id", F.lower("tok").alias("tok")
     )

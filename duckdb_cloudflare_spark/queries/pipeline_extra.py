@@ -33,6 +33,7 @@ from duckdb_cloudflare_spark.operators import dedup as D
 from duckdb_cloudflare_spark.operators import text_analysis as T
 from duckdb_cloudflare_spark.queries import load, register
 from duckdb_cloudflare_spark.queries.pipeline import p34_exact_jaccard_pairs
+from duckdb_cloudflare_spark.util.sizing import ensure_parallelism
 
 # The p34 pair derivation (trimmed to ids) as a reusable oracle CTE body.
 _PAIRS_CTES = r"""
@@ -118,7 +119,7 @@ def p39_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "TakeOrdered top-k (never a global sort of the full pair table).",
 )
 def p40_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
+    d = ensure_parallelism(load(spark, sf_dir, "documents"))
     return (
         d.select(T.tokens(F.lower(F.col("text"))).alias("ts"))
         .filter(F.size("ts") >= 2)
@@ -398,7 +399,7 @@ def p45_kmeans_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     "unrounded per the q48 rule.",
 )
 def p46_doc_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
+    d = ensure_parallelism(load(spark, sf_dir, "documents"))
     inv = (
         d.select("doc_id", D.lowered_tokens().alias("ts"))
         .filter(F.size("ts") >= 3)
@@ -440,7 +441,7 @@ def p46_doc_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     "aggregated shuffle over at most a few hundred buckets.",
 )
 def p47_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
+    d = ensure_parallelism(load(spark, sf_dir, "documents"))
     n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
     return (
         d.select(n_tok.alias("n_tokens"))
@@ -642,7 +643,7 @@ def p43_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 def p50_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import broadcast
 
-    d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
+    d = ensure_parallelism(load(spark, sf_dir, "documents"))
     ts = F.col("ts")
     toks = d.select("doc_id", D.lowered_tokens().alias("ts"))
     # Per-doc bigram multiplicities: dedups instance rows map-side (doc_id
@@ -663,7 +664,9 @@ def p50_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("f1"))
     )
-    v = c1.agg(F.count(F.lit(1)).cast("double").alias("vsize"))
+    # counts c1's rows (every f1 >= 1); reading f1 keeps c1's aggregate
+    # unpruned, so this and the join below share one token exchange
+    v = c1.agg(F.count_if(F.col("f1") > 0).cast("double").alias("vsize"))
     c2 = bd.groupBy("w1", "w2").agg(F.sum("m").alias("f2"))
     # Score at the BIGRAM level first: c2 x c1 is a vocab-sized join, so
     # the corpus-scale bd table joins exactly ONCE (on the precomputed
@@ -727,7 +730,7 @@ def p50_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     "any count-perturbing collision.",
 )
 def p51_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
+    d = ensure_parallelism(load(spark, sf_dir, "documents"))
     srcsh = (
         d.select("source", D.lowered_tokens().alias("ts"))
         .filter(F.size("ts") >= 5)
@@ -782,7 +785,7 @@ def p52_token_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import broadcast
     from pyspark.sql.window import Window
 
-    d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
+    d = ensure_parallelism(load(spark, sf_dir, "documents"))
     vocab = (
         d.select(F.explode(D.lowered_tokens()).alias("tok"))
         .groupBy("tok")

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from duckdb_cloudflare_spark.operators import dedup as D
 from duckdb_cloudflare_spark.operators import text_analysis as T
 from duckdb_cloudflare_spark.queries import load, register
+from duckdb_cloudflare_spark.util.sizing import ensure_parallelism
 
 _TOKS_CTE = r"""
     toks AS (
@@ -491,7 +492,7 @@ def p95_ngram_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p96_token_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     # regexp_extract_all over full texts is the dominant cost — fan it out
-    d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
+    d = ensure_parallelism(load(spark, sf_dir, "documents"))
     return T.token_fertility_report(d, group_col="lang")
 
 
@@ -620,7 +621,7 @@ def p98_cross_source_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 def p99_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ensure_parallelism: the bigram explode is a higher-order-function map
     # (interpreted) — a single-file scan would serialize it on one task
-    d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
+    d = ensure_parallelism(load(spark, sf_dir, "documents"))
     return T.vocab_growth_curve(d, n_buckets=10, ngram=2)
 
 
@@ -670,7 +671,7 @@ def p99_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     "global sort.",
 )
 def p100_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
+    d = ensure_parallelism(load(spark, sf_dir, "documents"))
     return T.pmi_collocations(d, top_k=50, min_count=5)
 
 
@@ -774,5 +775,5 @@ def q58_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sources table.",
 )
 def p101_source_char_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
+    d = ensure_parallelism(load(spark, sf_dir, "documents"))
     return T.source_char_similarity(d)

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from duckdb_cloudflare_spark.queries import load, register
+from duckdb_cloudflare_spark.util.sizing import ensure_parallelism
 
 
 @register(
@@ -72,10 +73,7 @@ from duckdb_cloudflare_spark.queries import load, register
     "skew-split eligible), one doc-keyed reassembly agg.",
 )
 def p102_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_cloudflare_spark.operators.dedup import (
-        ensure_parallelism,
-        line_dedup,
-    )
+    from duckdb_cloudflare_spark.operators.dedup import line_dedup
 
     # single-file scans otherwise run the whole explode→partial-agg stage
     # as ONE task on vanilla sessions (the r10 single-task trap)
@@ -203,7 +201,6 @@ def _html_wrap_col():
     "cross-engine regex parity.",
 )
 def p104_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_cloudflare_spark.operators.dedup import ensure_parallelism
     from duckdb_cloudflare_spark.operators.web import html_extract
 
     d = ensure_parallelism(load(spark, sf_dir, "documents"))
@@ -239,7 +236,6 @@ def p104_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "two partial-agg shuffles, no joins, no Python.",
 )
 def p105_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_cloudflare_spark.operators.dedup import ensure_parallelism
     from duckdb_cloudflare_spark.operators.text_analysis import bpe_pair_counts
 
     return bpe_pair_counts(ensure_parallelism(load(spark, sf_dir, "documents")))
@@ -287,7 +283,6 @@ def p105_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p106_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_cloudflare_spark.operators import text_analysis as T
-    from duckdb_cloudflare_spark.operators.dedup import ensure_parallelism
 
     d = ensure_parallelism(load(spark, sf_dir, "documents"))
     g = (
@@ -596,7 +591,6 @@ def q63_conversion_lag_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p107_neardup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_cloudflare_spark.operators.dedup import (
-        ensure_parallelism,
         exact_jaccard_pairs,
         minhash_est_jaccard_pairs,
     )
@@ -647,7 +641,6 @@ def p107_neardup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p108_image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_cloudflare_spark.operators import multimodal as M
-    from duckdb_cloudflare_spark.operators.dedup import ensure_parallelism
 
     d = ensure_parallelism(load(spark, sf_dir, "documents")).filter(
         F.col("doc_id") % 3 == 0  # the image modality slice (p13 convention)
@@ -675,7 +668,6 @@ def p108_image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p109_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_cloudflare_spark.operators import multimodal as M
-    from duckdb_cloudflare_spark.operators.dedup import ensure_parallelism
 
     d = ensure_parallelism(load(spark, sf_dir, "documents")).filter(
         F.col("doc_id") % 3 == 1  # the audio modality slice (p11 convention)
@@ -704,7 +696,6 @@ def p109_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p110_video_scene_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_cloudflare_spark.operators import multimodal as M
-    from duckdb_cloudflare_spark.operators.dedup import ensure_parallelism
 
     d = ensure_parallelism(load(spark, sf_dir, "documents")).filter(
         F.col("doc_id") % 3 == 2  # the video modality slice (p12 convention)

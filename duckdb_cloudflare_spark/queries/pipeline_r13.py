@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_cloudflare_spark.queries import load, register
+from duckdb_cloudflare_spark.util.sizing import ensure_parallelism
 
 _BPE_MERGES = 3  # graded depth; the operator takes any n (pytest runs 8)
 _BPE_TOP_TOKENS = 50
@@ -139,7 +140,6 @@ def _bpe_tokens_oracle(n_merges: int, top_n: int) -> str:
     "every few steps (lineage truncation), noted in the operator doc.",
 )
 def p111_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_cloudflare_spark.operators.dedup import ensure_parallelism
     from duckdb_cloudflare_spark.operators.text_analysis import bpe_train
 
     return bpe_train(
@@ -165,7 +165,6 @@ def p111_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     "every intermediate bit.",
 )
 def p113_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_cloudflare_spark.operators.dedup import ensure_parallelism
     from duckdb_cloudflare_spark.operators.text_analysis import bpe_token_counts
 
     return bpe_token_counts(
@@ -200,7 +199,6 @@ def p113_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exercise the undecodable path.",
 )
 def p112_multimodal_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_cloudflare_spark.operators.dedup import ensure_parallelism
     from duckdb_cloudflare_spark.operators.multimodal import (
         attach_fake_assets,
         multimodal_curation_report,
@@ -411,7 +409,6 @@ def q65_event_anomaly_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     "integer division (q48 rule).",
 )
 def p114_bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_cloudflare_spark.operators.dedup import ensure_parallelism
     from duckdb_cloudflare_spark.operators.text_analysis import bigram_xent
 
     d = ensure_parallelism(load(spark, sf_dir, "documents"))
@@ -464,7 +461,6 @@ def p114_bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     "agg; vectors never shuffle, no windows.",
 )
 def p115_sq8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_cloudflare_spark.operators.dedup import ensure_parallelism
     from duckdb_cloudflare_spark.operators.similarity import sq8_audit
 
     return sq8_audit(ensure_parallelism(load(spark, sf_dir, "embeddings")))
@@ -515,7 +511,6 @@ def p115_sq8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     "literal constants to the hash derivation.",
 )
 def p116_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_cloudflare_spark.operators.dedup import ensure_parallelism
     from duckdb_cloudflare_spark.operators.similarity import jl_project
 
     return jl_project(
@@ -589,7 +584,6 @@ def p116_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p117_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_cloudflare_spark.operators.curation import split_leakage_report
-    from duckdb_cloudflare_spark.operators.dedup import ensure_parallelism
 
     return split_leakage_report(
         ensure_parallelism(load(spark, sf_dir, "documents")), shingle_k=5
@@ -689,7 +683,6 @@ def q66_pivot_status_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p118_mix_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_cloudflare_spark.operators.curation import mix_plan
-    from duckdb_cloudflare_spark.operators.dedup import ensure_parallelism
 
     return mix_plan(ensure_parallelism(load(spark, sf_dir, "documents")))
 

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from duckdb_cloudflare_spark.queries import load, register
+from duckdb_cloudflare_spark.util.sizing import ensure_parallelism
 
 _SIM_PAT = ".*(green|olive).*"
 
@@ -235,7 +236,6 @@ _PQ_CTES = """
     "(p65 precedent).",
 )
 def p120_pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_cloudflare_spark.operators.dedup import ensure_parallelism
     from duckdb_cloudflare_spark.operators.similarity import pq_train
 
     return pq_train(
@@ -276,7 +276,6 @@ def p120_pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(dist, cid) tie-break).",
 )
 def p121_pq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_cloudflare_spark.operators.dedup import ensure_parallelism
     from duckdb_cloudflare_spark.operators.similarity import pq_assign
 
     return pq_assign(

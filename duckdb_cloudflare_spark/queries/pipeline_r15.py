@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from duckdb_cloudflare_spark.queries import load, register
 from duckdb_cloudflare_spark.queries.pipeline_r14 import _PQ_CTES
+from duckdb_cloudflare_spark.util.sizing import ensure_parallelism
 
 
 @register(
@@ -208,7 +209,6 @@ def q72_window_exclude_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     "neighbor_id.",
 )
 def p124_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_cloudflare_spark.operators.dedup import ensure_parallelism
     from duckdb_cloudflare_spark.operators.similarity import pq_topk
 
     emb = ensure_parallelism(load(spark, sf_dir, "embeddings"))
@@ -291,7 +291,6 @@ def p124_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "neighbor_id.",
 )
 def p125_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_cloudflare_spark.operators.dedup import ensure_parallelism
     from duckdb_cloudflare_spark.operators.similarity import pq_rerank_topk
 
     emb = ensure_parallelism(load(spark, sf_dir, "embeddings"))
@@ -516,7 +515,6 @@ _IVFPQ_CTES = """
     "all three stages as CTEs.",
 )
 def p126_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_cloudflare_spark.operators.dedup import ensure_parallelism
     from duckdb_cloudflare_spark.operators.similarity import ivfpq_topk
 
     emb = ensure_parallelism(load(spark, sf_dir, "embeddings"))

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from duckdb_cloudflare_spark.operators import dedup as D
 from duckdb_cloudflare_spark.operators import text_analysis as T
 from duckdb_cloudflare_spark.queries import load, register
+from duckdb_cloudflare_spark.util.sizing import ensure_parallelism
 
 
 @register(
@@ -231,7 +232,7 @@ def p88_dup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc survive the map side), one doc-keyed fold — linear, no joins.",
 )
 def p89_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = D.ensure_parallelism(load(spark, sf_dir, "documents"))
+    d = ensure_parallelism(load(spark, sf_dir, "documents"))
     return T.char_entropy(d)
 
 

@@ -294,3 +294,41 @@ def test_no_second_ngram_builder():
                 line = src.count("\n", 0, m.start()) + 1
                 found.append((path.name, f"{m.group(1)} over slices at line {line}"))
     assert found == [], found
+
+
+# ---------------------------------------------------------------------------
+# text_analysis.identify_language: argmax of stopword hits, ties to the
+# smallest code, 'und' without hits
+# ---------------------------------------------------------------------------
+
+
+def _py_language(text):
+    """The rule in plain Python, for ASCII text."""
+    if text is None:
+        return "und"
+    toks = text.lower().strip(" ").split()
+    hits = {lang: sum(t in words for t in toks) for lang, words in T.STOPWORDS.items()}
+    top = max(hits.values())
+    return "und" if top == 0 else min(lang for lang, h in hits.items() if h == top)
+
+
+LANG_ROWS = [
+    (1, None, "und"),
+    (2, "", "und"),
+    (3, "   ", "und"),
+    (4, "hello world again", "und"),
+    (5, "el le", "es"),  # two-way tie es/fr
+    (6, "THE 的", "en"),  # two-way tie en/zh, upper case folded
+    (7, "in en der", "de"),  # three-way tie de/en/es
+    (8, "the and el y der und", "de"),  # three-way tie at 2 hits
+    (9, "la la the", "es"),  # es/fr tie at 2 beats en's 1
+    (10, "the the la", "en"),
+    (11, "\tder die das  und", "de"),
+]
+
+
+def test_identify_language_ties_null_and_empty(spark):
+    df = spark.createDataFrame([r[:2] for r in LANG_ROWS], "id int, text string")
+    got = dict(df.select("id", T.identify_language(F.col("text"))).collect())
+    assert got == {i: _py_language(text) for i, text, _ in LANG_ROWS}
+    assert got == {i: want for i, _, want in LANG_ROWS}

@@ -196,12 +196,13 @@ def test_planted_skew_minhash_bucket_cap_bounds_candidates(spark):
     from pyspark.sql import functions as F
 
     from duckdb_cloudflare_spark.operators import dedup as D
+    from duckdb_cloudflare_spark.util.sizing import ensure_parallelism
 
     # 200 byte-identical docs → every band bucket they land in has exactly
     # 200 members; a cap of 50 must drop ALL of them (no 200² candidate
     # explosion ever forms), and the unique docs share no buckets at all.
     df = _skewed_docs(spark, identical_hot=True)
-    base = D.ensure_parallelism(df).select(
+    base = ensure_parallelism(df).select(
         F.col("doc_id").alias("id"), D.shingles(F.col("text"), 3).alias("sh")
     )
     capped = D._lsh_verified_pairs(base, 64, 8, 0.5, max_bucket=50)

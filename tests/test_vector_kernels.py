@@ -196,12 +196,17 @@ def test_pq_assign_dirty(dirty):
 
 @pytest.fixture
 def one_batch(spark):
-    """Frames coalesced to one partition reach the kernel as ONE Arrow
-    batch (ensure_parallelism would otherwise split ten rows into batches
-    too small for the shortlist band to engage)."""
-    spark.conf.set("spark.duckdb_cloudflare.assumeParallel", "true")
-    yield lambda rows, schema: spark.createDataFrame(rows, schema).coalesce(1)
-    spark.conf.unset("spark.duckdb_cloudflare.assumeParallel")
+    """Frames hash-partitioned on a constant reach the kernel as ONE Arrow
+    batch: every row lands in one partition, and at ``defaultParallelism``
+    partitions ensure_parallelism leaves the frame as it is (it would
+    otherwise spread ten rows into batches too small for the shortlist
+    band to engage)."""
+    from pyspark.sql import functions as F
+
+    width = spark.sparkContext.defaultParallelism
+    return lambda rows, schema: spark.createDataFrame(rows, schema).repartition(
+        width, F.lit(0)
+    )
 
 
 VEC2 = "vec_id long, embedding array<double>"
